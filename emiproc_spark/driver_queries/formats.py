@@ -1,70 +1,55 @@
-"""Driver-contract queries for I/O paths and round-2 operators.
+"""Source and export file round-trip driver queries: each query writes a
+real file in the reader's format (NetCDF-3/4, GeoPackage, GRAL,
+shapefile, WRF, PNG, WAV, JSON lines, ORC, ...), reads it back
+through the distributed scan and must agree with an oracle that never
+leaves SQL, so codec, layout, unit identity and time semantics are all
+on the hook.
 
-Same contract as ``driver_queries``: each Spark callable has a DuckDB
-oracle computing the identical result in closed-form ANSI SQL over the
-driver's parquet tables.  Float determinism via qhelpers quantization.
+Every query takes ``(spark, sf_dir)`` and returns a DataFrame whose row
+multiset the DuckDB oracle SQL next to it reproduces over the driver's
+parquet tables.  Parity conventions: md5-derived randomness, per-row
+IEEE doubles written identically on both engines, sums through the
+µ-quantized integer helpers (``qhelpers``), explicit tie-break keys.
 
-The NetCDF queries exercise the REAL file path: the Spark side writes a
-classic NetCDF-3 file with the pure-numpy codec, re-ingests it through
-the distributed ``binaryFile``+``mapInPandas`` scan, and must agree
-with an oracle that never leaves SQL — so codec, layout (lon-major cell
-ids), unit identity, and time-mean semantics are all on the hook.
+- ``png_cycle``: the real (non-fake) image decode path — deterministic
+  pixels → ``write_png`` → ``decode_image`` → pixel statistics, all
+  executor-side through Arrow ``mapInPandas``; the oracle recomputes
+  the statistics arithmetically, so the whole encode→decode cycle must
+  be lossless for the hashes to match.
+- ``gpkg_lines``: the GeoPackage line-buffer ingest path (reference
+  ``process_emission_category``, inventories/utils.py:58-88 —
+  ``buffer(width, cap_style=3)``): straight polylines written to a real
+  .gpkg, read back through ``from_geopackage`` which buffers them to
+  polygons; the square-cap rectangle area ``(L + 2w)·2w`` is closed
+  form, so the oracle recomputes it arithmetically.
+- ``cf_attrs``: ``nc_cf_attributes`` standalone read-back (reference
+  exports/netcdf.py:6-69): CF global attributes written through
+  ``export_raster_netcdf`` and read back from the file; timestamped
+  fields are checked as presence markers, deterministic fields by
+  value.
+- ``orc_partitioned``: the documents table persisted as
+  hive-partitioned ORC and read back through partition pruning —
+  sink/source breadth beyond parquet, pruning pinned in
+  tests/test_plan_shapes.py.
+- ``jsonl_roundtrip``: documents → JSON-lines files (executor-side,
+  one file per partition) → schema-explicit read-back (no inference
+  scan) — proves the JSON sink/source path is lossless for text.
 """
 
 from __future__ import annotations
 
 import os
+import re
+from collections.abc import Iterator
 
+import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from emiproc_spark.localdf import local_rows_df
 from emiproc_spark import fixtures as fx
-from emiproc_spark.operators import speciation as spn
+from emiproc_spark.localdf import local_rows_df
 from emiproc_spark.qhelpers import qd, sql_qd, sql_sumd, sumd
 from emiproc_spark.sources.readers import SECONDS_PER_YEAR
-
-# ======================================================================
-# speciate_inventory: dict-driven (cat,sub)→(cat',sub') fan-out
-# (reference emiproc/speciation.py:351-436 — category may change,
-# ratios need not sum to 1)
-# ======================================================================
-SPECIATE_INV_DICT = {
-    ("A", "F"): {("A2", "F1"): 0.4, ("B2", "F2"): 0.7},
-    ("R", "O"): {("R", "O3"): 1.1},
-}
-
-
-def q_speciate_inventory(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = fx.emissions(spark, sf_dir)
-    sp = spn.speciate_inventory(e, SPECIATE_INV_DICT)
-    return sp.groupBy("cell_id", "category", "substance").agg(
-        sumd("value_kg_y").alias("value_kg_y")
-    )
-
-
-SQL_SPECIATE_INVENTORY = f"""
-    WITH e AS ({fx.EMISSIONS_SQL}),
-    sp AS (
-        SELECT cell_id, 'A2' AS category, 'F1' AS substance,
-               value_kg_y * 0.4 AS value_kg_y
-        FROM e WHERE category = 'A' AND substance = 'F'
-        UNION ALL
-        SELECT cell_id, 'B2' AS category, 'F2' AS substance,
-               value_kg_y * 0.7 AS value_kg_y
-        FROM e WHERE category = 'A' AND substance = 'F'
-        UNION ALL
-        SELECT cell_id, 'R' AS category, 'O3' AS substance,
-               value_kg_y * 1.1 AS value_kg_y
-        FROM e WHERE category = 'R' AND substance = 'O'
-        UNION ALL
-        SELECT cell_id, category, substance, value_kg_y
-        FROM e WHERE NOT (   (category = 'A' AND substance = 'F')
-                          OR (category = 'R' AND substance = 'O'))
-    )
-    SELECT cell_id, category, substance, {sql_sumd('value_kg_y')} AS value_kg_y
-    FROM sp GROUP BY 1, 2, 3
-"""
 
 
 # ======================================================================
@@ -245,21 +230,6 @@ SQL_TNO_POINTS = """
            CAST(SUM(f + o) AS DOUBLE) AS value_kg_y
     FROM s GROUP BY 1, 2, 3
 """
-
-
-QUERIES_IO = {
-    "speciate_inventory": q_speciate_inventory,
-    "netcdf_ingest": q_netcdf_ingest,
-    "tno_ingest": q_tno_ingest,
-    "tno_points": q_tno_points,
-}
-
-ORACLES_IO = {
-    "speciate_inventory": SQL_SPECIATE_INVENTORY,
-    "netcdf_ingest": SQL_NETCDF_INGEST,
-    "tno_ingest": SQL_TNO_INGEST,
-    "tno_points": SQL_TNO_POINTS,
-}
 
 
 # ======================================================================
@@ -499,25 +469,6 @@ SQL_SAUNOIS_INGEST = f"""
 """
 
 
-QUERIES_IO.update(
-    {
-        "edgar_ingest": q_edgar_ingest,
-        "cams_ingest": q_cams_ingest,
-        "gfas_ingest": q_gfas_ingest,
-        "saunois_ingest": q_saunois_ingest,
-    }
-)
-
-ORACLES_IO.update(
-    {
-        "edgar_ingest": SQL_EDGAR_INGEST,
-        "cams_ingest": SQL_CAMS_INGEST,
-        "gfas_ingest": SQL_GFAS_INGEST,
-        "saunois_ingest": SQL_SAUNOIS_INGEST,
-    }
-)
-
-
 # ======================================================================
 # GeoPackage round-trip: export via sqlite3 → distributed layer read →
 # MapLuft-style unpivot (reference exports/geopackage.py:9-55,
@@ -570,9 +521,6 @@ SQL_GPKG_ROUNDTRIP = """
            n_regionkey + 0.5, 21
     FROM nation
 """
-
-QUERIES_IO["gpkg_roundtrip"] = q_gpkg_roundtrip
-ORACLES_IO["gpkg_roundtrip"] = SQL_GPKG_ROUNDTRIP
 
 
 # ======================================================================
@@ -677,62 +625,6 @@ SQL_SWISS_INGEST = f"""
     FROM per_cell p, tot WHERE p.rv <> 0
 """
 
-QUERIES_IO["gral_roundtrip"] = q_gral_roundtrip
-ORACLES_IO["gral_roundtrip"] = SQL_GRAL_ROUNDTRIP
-QUERIES_IO["swiss_ingest"] = q_swiss_ingest
-ORACLES_IO["swiss_ingest"] = SQL_SWISS_INGEST
-
-
-# ======================================================================
-# TNO gridded day-of-year profiles: CSV → per-cell normalized ratios
-# (reference read_tno_gridded_profiles, inventories/tno.py:325-404)
-# ======================================================================
-TNOP_NLON, TNOP_NLAT, TNOP_DAYS = 3, 2, 365
-
-
-def q_tno_profiles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from emiproc_spark.sources.tno import tno_gridded_profiles
-
-    lines = ["year,latitude,longitude,POLL,GNFR,day,Factor"]
-    for lon_i in range(TNOP_NLON):
-        for lat_i in range(TNOP_NLAT):
-            cell = lon_i * TNOP_NLAT + lat_i
-            for day in range(1, TNOP_DAYS + 1):
-                f = (day * 3 + cell * 7) % 11 + 1
-                lines.append(
-                    f"2020,{45.5 + lat_i},{7.5 + lon_i},CH4,A,{day},{f}"
-                )
-                # duplicated rows must collapse (first wins) and other
-                # years filter out
-                lines.append(f"2020,{45.5 + lat_i},{7.5 + lon_i},CH4,A,{day},{9 * f}")
-                lines.append(f"2019,{45.5 + lat_i},{7.5 + lon_i},CH4,A,{day},999")
-    d = fx.scratch_dir("emiproc_tnop_")
-    path = os.path.join(d, "profiles.csv")
-    with open(path, "w") as fobj:
-        fobj.write("\n".join(lines) + "\n")
-    ratios, _ = tno_gridded_profiles(spark, path, year=2020)
-    return ratios
-
-
-SQL_TNO_PROFILES = f"""
-    WITH c AS (
-        SELECT lo.lo * {TNOP_NLAT} + la.la AS cell_id
-        FROM range({TNOP_NLON}) lo(lo) CROSS JOIN range({TNOP_NLAT}) la(la)
-    ),
-    f AS (
-        SELECT cell_id, d.d AS pos,
-               CAST(((d.d + 1) * 3 + cell_id * 7) % 11 + 1 AS DOUBLE) AS factor
-        FROM c CROSS JOIN range({TNOP_DAYS}) d(d)
-    ),
-    tot AS (SELECT cell_id, SUM(factor) AS t FROM f GROUP BY cell_id)
-    SELECT 'A' AS category, 'CH4' AS substance, f.cell_id,
-           CAST(f.pos AS INT) AS pos, f.factor / t.t AS ratio
-    FROM f JOIN tot t USING (cell_id)
-"""
-
-QUERIES_IO["tno_profiles"] = q_tno_profiles
-ORACLES_IO["tno_profiles"] = SQL_TNO_PROFILES
-
 
 # ======================================================================
 # Swiss PRTR Excel ingest: stdlib XLSX decode + mapping/unit semantics
@@ -787,33 +679,6 @@ SQL_PRTR_INGEST = """
            CAST(n_regionkey AS DOUBLE) * 10.0 + 1.0
     FROM nation
 """
-
-QUERIES_IO["prtr_ingest"] = q_prtr_ingest
-ORACLES_IO["prtr_ingest"] = SQL_PRTR_INGEST
-
-
-# ======================================================================
-# weights cache round-trip: build → parquet cache → re-read must equal
-# the closed-form weights (reference get_weights_mapping .npz cache,
-# regrid.py:42-101)
-# ======================================================================
-def q_weights_cache(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from emiproc_spark.operators.regrid import weights_rect_rect
-    from emiproc_spark.plans.cache import cached_weights
-
-    d = fx.scratch_dir("emiproc_wcache_")
-
-    def build():
-        return weights_rect_rect(
-            fx.fine_grid(spark), fx.coarse_grid(spark), tile=fx.COARSE_D
-        )
-
-    # first call computes + persists, second must hit the parquet cache
-    cached_weights(spark, d, "fine10", "coarse4", build)
-    return cached_weights(spark, d, "fine10", "coarse4", build)
-
-
-SQL_WEIGHTS_CACHE = fx.WEIGHTS_SQL
 
 
 # ======================================================================
@@ -1027,25 +892,6 @@ SQL_WRF_FLUX = f"""
     FROM agg
 """
 
-QUERIES_IO.update(
-    {
-        "weights_cache": q_weights_cache,
-        "edgar_legacy": q_edgar_legacy,
-        "wetcharts_ingest": q_wetcharts_ingest,
-        "gfed5_ingest": q_gfed5_ingest,
-        "wrf_flux": q_wrf_flux,
-    }
-)
-ORACLES_IO.update(
-    {
-        "weights_cache": SQL_WEIGHTS_CACHE,
-        "edgar_legacy": SQL_EDGAR_LEGACY,
-        "wetcharts_ingest": SQL_WETCHARTS_INGEST,
-        "gfed5_ingest": SQL_GFED5_INGEST,
-        "wrf_flux": SQL_WRF_FLUX,
-    }
-)
-
 
 # ======================================================================
 # LPJ-GUESS ingest: {substance}_{category} variable naming,
@@ -1123,81 +969,789 @@ SQL_LPJ_INGEST = f"""
     FROM sums s JOIN areas a USING (la)
 """
 
-QUERIES_IO["lpj_ingest"] = q_lpj_ingest
-ORACLES_IO["lpj_ingest"] = SQL_LPJ_INGEST
+
+# ======================================================================
+# from_duckdb: DuckDB table with emission_* wide columns → long form
+# (reference DuckDBInventory, inventories/zurich/duck.py:84-154)
+# ======================================================================
+def q_from_duckdb(spark: SparkSession, sf_dir: str) -> DataFrame:
+    import duckdb
+
+    from emiproc_spark.sources.readers import from_duckdb
+
+    path = os.path.join(fx.scratch_dir("emiproc_duck_"), "inv.duckdb")
+    con = duckdb.connect(path)
+    try:
+        con.execute(
+            f"""
+            CREATE TABLE inv AS
+            SELECT n_nationkey AS cell_id, n_name AS category,
+                   CAST(n_nationkey * 1.5 + 1 AS DOUBLE) AS emission_co2,
+                   CAST(n_regionkey * 2.25 AS DOUBLE) AS emission_ch4
+            FROM read_parquet('{sf_dir}/nation.parquet')
+            """
+        )
+    finally:
+        con.close()
+    return from_duckdb(spark, path, "inv", where="cell_id >= 5")
+
+
+SQL_FROM_DUCKDB = """
+    SELECT n_nationkey AS cell_id, n_name AS category, 'co2' AS substance,
+           CAST(n_nationkey * 1.5 + 1 AS DOUBLE) AS value_kg_y
+    FROM nation WHERE n_nationkey >= 5
+    UNION ALL
+    SELECT n_nationkey, n_name, 'ch4', CAST(n_regionkey * 2.25 AS DOUBLE)
+    FROM nation WHERE n_nationkey >= 5
+"""
 
 
 # ======================================================================
-# Profile CSV readers: weekly temporal profiles (column-set dispatch +
-# auto-normalize + dedup) and vertical height-header profiles
-# (reference profiles/temporal/io.py:167-181, vertical_profiles.py:276-364)
+# osm_json_to_sources: Overpass JSON → WKB point/way sources
+# (reference emiproc/utils/osm.py:18-179)
 # ======================================================================
-def q_tprofiles_csv(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from emiproc_spark.sources.profiles_io import read_temporal_profiles_csv
+def q_osm_ways(spark: SparkSession, sf_dir: str) -> DataFrame:
+    import json
 
-    d = fx.scratch_dir("emiproc_tp_")
-    p = os.path.join(d, "profiles.csv")
-    with open(p, "w") as f:
-        f.write("category,Mon,Tue,Wed,Thu,Fri,Sat,Sun\n")
-        f.write("A,1,2,3,4,5,6,7\n")
-        f.write("B,2,2,2,2,2,2,2\n")
-        f.write("C,1,2,3,4,5,6,7\n")  # duplicate of A: dedup path
-    store, index = read_temporal_profiles_csv(spark, p, ["category"])
-    out = index.join(store, ["profile_id", "ptype"]).select(
-        "category", "ptype", F.posexplode("ratios").alias("pos", "ratio")
+    from emiproc_spark.sources.osm import osm_json_to_sources
+
+    nations = sorted(
+        fx.load(spark, sf_dir, "nation")
+        .select("n_nationkey", "n_regionkey")
+        .collect(),
+        key=lambda r: r["n_nationkey"],
     )
-    return out.withColumn("ratio", qd("ratio"))
-
-
-SQL_TPROFILES_CSV = """
-    WITH rows(category, pos, v) AS (
-        SELECT cat.category, t.pos,
-               CASE WHEN cat.category = 'B' THEN 2.0 ELSE CAST(t.pos + 1 AS DOUBLE) END
-        FROM (VALUES ('A'), ('B'), ('C')) AS cat(category),
-             UNNEST(range(7)) AS t(pos)
+    elements = [
+        {
+            "type": "node",
+            "id": 1000 + r["n_nationkey"],
+            "lon": float(r["n_nationkey"]),
+            "lat": float(r["n_regionkey"] * 2),
+        }
+        for r in nations
+    ]
+    by_region: dict[int, list[int]] = {}
+    for r in nations:
+        by_region.setdefault(r["n_regionkey"], []).append(1000 + r["n_nationkey"])
+    elements += [
+        {
+            "type": "way",
+            "id": 2000 + rk,
+            "nodes": refs,
+            "tags": {"highway": "primary"},
+        }
+        for rk, refs in sorted(by_region.items())
+    ]
+    path = os.path.join(fx.scratch_dir("emiproc_osm_"), "overpass.json")
+    with open(path, "w") as f:
+        json.dump({"elements": elements}, f)
+    out = osm_json_to_sources(spark, path)
+    # WKB length pins the geometry kind and the resolved vertex count:
+    # point = 21 bytes, linestring = 9 + 16·n
+    return out.select(
+        "osm_id", "osm_type", F.length("geometry").alias("wkb_len")
     )
-    SELECT category, 'weekly' AS ptype, pos,
-           {qd} AS ratio
-    FROM rows
-""".format(qd=sql_qd("v / SUM(v) OVER (PARTITION BY category)"))
 
 
-def q_vprofiles_csv(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from emiproc_spark.sources.profiles_io import read_vertical_profiles_csv
+SQL_OSM_WAYS = """
+    SELECT 1000 + n_nationkey AS osm_id, 'node' AS osm_type, 21 AS wkb_len
+    FROM nation
+    UNION ALL
+    SELECT 2000 + n_regionkey, 'way', CAST(9 + 16 * COUNT(*) AS INT)
+    FROM nation GROUP BY n_regionkey
+"""
 
-    d = fx.scratch_dir("emiproc_vp_")
-    p = os.path.join(d, "vertical.csv")
-    with open(p, "w") as f:
-        # headers intentionally out of height order: the reader re-sorts
-        f.write("category,92m,20m,184m\n")
-        f.write("traffic,0,10,0\n")
-        f.write("industry,4,1,5\n")
-    store, index = read_vertical_profiles_csv(spark, p, ["category"])
-    out = index.join(store, "profile_id").select(
-        "category",
-        F.posexplode(F.arrays_zip("heights_top_m", "ratios")).alias("pos", "z"),
+
+# ======================================================================
+# shapefile_regions: .shp/.dbf → regions table → cell fractions
+# (reference get_natural_earth/get_timezones + get_country_mask,
+# emiproc/utilities.py:103-314, 317-531)
+# ======================================================================
+def q_shapefile_regions(spark: SparkSession, sf_dir: str) -> DataFrame:
+    import numpy as np
+    import pandas as pd
+
+    from emiproc_spark.operators.masks import cell_region_fractions
+    from emiproc_spark.sources.shapefile import shapefile_to_regions, write_shapefile
+
+    regs = sorted(
+        fx.load(spark, sf_dir, "region").select("r_regionkey", "r_name").collect(),
+        key=lambda r: r["r_regionkey"],
     )
+    # region r covers the x ∈ [2r, 2r+2) stripe of the 10×10 fixture grid
+    polys = [
+        [np.array([[2.0 * r["r_regionkey"], 0.0], [2.0 * r["r_regionkey"] + 2.0, 0.0],
+                   [2.0 * r["r_regionkey"] + 2.0, 10.0], [2.0 * r["r_regionkey"], 10.0]])]
+        for r in regs
+    ]
+    attrs = pd.DataFrame({"NAME": [r["r_name"] for r in regs]})
+    base = os.path.join(fx.scratch_dir("emiproc_shp_"), "regions")
+    write_shapefile(base, polys, attrs)
+    regions = shapefile_to_regions(spark, base + ".shp", label_field="NAME")
+    fr = cell_region_fractions(regions, fx.fine_grid(spark), tile=2.5)
+    return fr.withColumn("fraction", qd("fraction"))
+
+
+SQL_SHAPEFILE_REGIONS = """
+    SELECT t.i * 10 + s.j AS cell_id, r.r_name AS country, 1.0 AS fraction
+    FROM range(10) t(i) CROSS JOIN range(10) s(j)
+    JOIN region r ON r.r_regionkey = t.i // 2
+"""
+
+
+# ======================================================================
+# fluxie export file layout round-trip (reference exports/fluxie.py):
+# write the yearly per-substance NetCDFs, read flux_total_prior and the
+# country rollup back, compare against the closed-form SQL
+# ======================================================================
+FLUXIE_YEAR = 2020
+
+
+def q_fluxie_export(spark: SparkSession, sf_dir: str) -> DataFrame:
+    import numpy as np
+
+    from emiproc_spark.exports.fluxie import export_fluxie
+    from emiproc_spark.functions.netcdf3 import read_netcdf
+
+    # two-stage quantized pre-aggregation: the per-(cell, substance)
+    # value entering the file is byte-identical to the oracle's nested
+    # sumd, so the export's internal category sum adds single rows only
+    agg = (
+        fx.emissions(spark, sf_dir)
+        .groupBy("cell_id", "category", "substance")
+        .agg(sumd("value_kg_y").alias("value_kg_y"))
+        .groupBy("cell_id", "substance")
+        .agg(sumd("value_kg_y").alias("value_kg_y"))
+        .withColumn("category", F.lit("all"))
+    )
+    grid = _raster_grid(spark)
+    cfrac = grid.select(
+        "cell_id",
+        F.concat(F.lit("C"), (F.col("cell_id") % 3).cast("string")).alias(
+            "country"
+        ),
+        F.lit(1.0).alias("fraction"),
+    )
+    out = fx.scratch_dir("emiproc_fluxie_")
+    export_fluxie({FLUXIE_YEAR: agg}, grid, cfrac, out)
+    rows = []
+    base = os.path.join(out, "emiproc")
+    for sub in sorted(os.listdir(base)):
+        ds = read_netcdf(
+            os.path.join(base, sub, f"emiproc_{sub}_yearly.nc")
+        )  # files are read eagerly below, so the tree can be removed
+        # before returning (repeated sweeps must not accumulate /tmp)
+        flux = np.asarray(ds.variables["flux_total_prior"].data)[0]
+        cflux = np.asarray(ds.variables["country_flux_total_prior"].data)[0]
+        countries = list(ds.variables["country"].data)
+        lats = np.asarray(ds.variables["latitude"].data)
+        lons = np.asarray(ds.variables["longitude"].data)
+        for li, lat in enumerate(lats):
+            for lo, lon in enumerate(lons):
+                if flux[li, lo] != 0.0:
+                    rows.append(
+                        (sub, "cell", float(lon), float(lat), float(flux[li, lo]))
+                    )
+        for ci, c in enumerate(countries):
+            if isinstance(c, np.ndarray):  # NetCDF char-matrix row
+                c = c.tobytes().decode().rstrip("\x00").strip()
+            elif isinstance(c, bytes):
+                c = c.decode()
+            rows.append((sub, "country:" + c, -1.0, -1.0, float(cflux[ci])))
+    import shutil
+
+    shutil.rmtree(out, ignore_errors=True)
+    # cell fluxes are byte-identical µ-multiples (qd at 1e9 is exact on
+    # identical inputs); country sums are float dots in engine-specific
+    # order, so quantize those to 1e-2 (≫ the ~1e-8 order noise)
+    out_df = local_rows_df(spark, 
+        rows, "substance string, kind string, lon double, lat double, flux double"
+    )
+    return out_df.select(
+        "substance",
+        "kind",
+        "lon",
+        "lat",
+        F.when(F.col("kind") == "cell", qd("flux"))
+        .otherwise(qd("flux", 100.0))
+        .alias("flux"),
+    )
+
+
+SQL_FLUXIE_EXPORT = f"""
+    WITH e AS ({fx.EMISSIONS_SQL}),
+    agg AS (
+        SELECT cell_id, substance, {sql_sumd('value_kg_y')} AS v
+        FROM (
+            SELECT cell_id, category, substance,
+                   {sql_sumd('value_kg_y')} AS value_kg_y
+            FROM e GROUP BY 1, 2, 3
+        ) GROUP BY 1, 2
+    ),
+    cells AS (
+        SELECT substance, 'cell' AS kind,
+               CAST(cell_id // 10 AS DOUBLE) AS lon,
+               CAST(cell_id % 10 AS DOUBLE) AS lat,
+               {sql_qd('v / 1.0')} AS flux
+        FROM agg WHERE v <> 0.0
+    ),
+    countries AS (
+        SELECT substance, 'country:C' || CAST(cell_id % 3 AS VARCHAR) AS kind,
+               -1.0 AS lon, -1.0 AS lat,
+               {sql_qd('SUM(v / 1.0)', 100.0)} AS flux
+        FROM agg GROUP BY 1, 2
+    )
+    SELECT * FROM cells UNION ALL SELECT * FROM countries
+"""
+
+
+# ======================================================================
+# netcdf4_ingest — raster export → re-ingest through the NetCDF-4/HDF5
+# container (minimal pure-numpy writer + reader, functions/hdf5*.py)
+# ======================================================================
+def q_netcdf4_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from emiproc_spark import fixtures as fx
+    from emiproc_spark.exports.netcdf import export_raster_netcdf
+    from emiproc_spark.qhelpers import sumd
+    from emiproc_spark.sources.netcdf import from_netcdf_rasters
+
+    agg = (
+        fx.emissions(spark, sf_dir)
+        .groupBy("cell_id", "category", "substance")
+        .agg(sumd("value_kg_y").alias("value_kg_y"))
+    )
+    out = os.path.join(fx.scratch_dir("emiproc_nc4_"), "inv.nc")
+    export_raster_netcdf(
+        agg, _raster_grid(spark), out, add_totals=False, container="hdf5"
+    )
+    return from_netcdf_rasters(spark, out)
+
+
+SQL_NETCDF4_INGEST = SQL_NETCDF_INGEST
+
+
+# ======================================================================
+# gfed4_ingest — GFED4 HDF5 layout (nested emissions/MM/partitioning
+# groups) written by the minimal writer, scanned by the distributed
+# GFED4 reader through the built-in HDF5 codec
+# ======================================================================
+GFED_NLAT, GFED_NLON = 3, 4
+
+
+def _write_gfed4_fixture(d: str) -> None:
+    """DM(month) = month, frac_SAVA = (lat+1)/10, frac_TEMF = (lon+1)/20,
+    area = 100 — annual kg = Σ_m month·frac·100 = 7800·frac."""
+    import numpy as np
+
+    from emiproc_spark.functions.hdf5_write import write_netcdf4
+    from emiproc_spark.functions.netcdf3 import NCDataset, NCVariable
+
+    lat_i = np.arange(GFED_NLAT)[:, None] * np.ones((1, GFED_NLON))
+    lon_i = np.ones((GFED_NLAT, 1)) * np.arange(GFED_NLON)[None, :]
+    vs = {
+        "ancill/grid_cell_area": NCVariable(
+            "a", ("lat", "lon"), np.full((GFED_NLAT, GFED_NLON), 100.0), {}
+        )
+    }
+    for m in range(1, 13):
+        vs[f"emissions/{m:02}/DM"] = NCVariable(
+            "dm", ("lat", "lon"), np.full((GFED_NLAT, GFED_NLON), float(m)), {}
+        )
+        vs[f"emissions/{m:02}/partitioning/DM_SAVA"] = NCVariable(
+            "p", ("lat", "lon"), (lat_i + 1) / 10.0, {}
+        )
+        vs[f"emissions/{m:02}/partitioning/DM_TEMF"] = NCVariable(
+            "p", ("lat", "lon"), (lon_i + 1) / 20.0, {}
+        )
+    ds = NCDataset(dims={"lat": GFED_NLAT, "lon": GFED_NLON}, variables=vs)
+    write_netcdf4(os.path.join(d, "GFED4.1s_2020.hdf5"), ds)
+
+
+def q_gfed4_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from emiproc_spark.sources.gfed import gfed4_emissions
+
+    d = fx.scratch_dir("emiproc_gfed4_")
+    _write_gfed4_fixture(d)
+    return gfed4_emissions(spark, d).withColumn("value_kg_y", qd("value_kg_y"))
+
+
+SQL_GFED4_INGEST = """
+    WITH cells AS (
+        SELECT CAST(lon.i * {nlat} + lat.i AS BIGINT) AS cell_id,
+               lat.i AS lat_i, lon.i AS lon_i
+        FROM UNNEST(range({nlat})) AS lat(i), UNNEST(range({nlon})) AS lon(i)
+    )
+    SELECT cell_id, 'SAVA' AS category, 'DM' AS substance,
+           {qd_sava} AS value_kg_y
+    FROM cells
+    UNION ALL
+    SELECT cell_id, 'TEMF', 'DM', {qd_temf}
+    FROM cells
+""".format(
+    nlat=GFED_NLAT,
+    nlon=GFED_NLON,
+    qd_sava=sql_qd("7800.0 * (lat_i + 1) / 10.0"),
+    qd_temf=sql_qd("7800.0 * (lon_i + 1) / 20.0"),
+)
+
+
+# ======================================================================
+# png_cycle — real image decode through the pure-numpy PNG codec
+# ======================================================================
+N_IMAGES = 200
+SIDE = 4
+
+
+def q_png_cycle(spark: SparkSession, sf_dir: str) -> DataFrame:
+    import numpy as np
+    import pandas as pd
+
+    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        from emiproc_spark.functions.png import write_png
+        from emiproc_spark.operators.multimodal import decode_image
+
+        for pdf in batches:
+            out = []
+            for doc_id in pdf["id"]:
+                i = int(doc_id)
+                px = (
+                    (i * 31 + np.arange(SIDE * SIDE)) % 256
+                ).astype(np.uint8).reshape(SIDE, SIDE)
+                img = decode_image(write_png(px), fake=False)
+                flat = img.astype(np.int64)
+                out.append(
+                    {
+                        "doc_id": i,
+                        "n_px": int(flat.size),
+                        "checksum": int(flat.sum() % 1_000_003),
+                        "mean_byte": float(flat.mean()),
+                    }
+                )
+            yield pd.DataFrame(
+                out, columns=["doc_id", "n_px", "checksum", "mean_byte"]
+            )
+
+    return spark.range(N_IMAGES).mapInPandas(
+        run, "doc_id long, n_px long, checksum long, mean_byte double"
+    )
+
+
+SQL_PNG_CYCLE = f"""
+    WITH px AS (
+        SELECT d.i AS doc_id, (d.i * 31 + p.p) % 256 AS v
+        FROM range({N_IMAGES}) d(i), range({SIDE * SIDE}) p(p)
+    )
+    SELECT doc_id,
+           CAST({SIDE * SIDE} AS BIGINT) AS n_px,
+           CAST(SUM(v) % 1000003 AS BIGINT) AS checksum,
+           CAST(SUM(v) AS DOUBLE) / {SIDE * SIDE} AS mean_byte
+    FROM px GROUP BY doc_id
+"""
+
+
+# ======================================================================
+# gpkg_lines — line-buffer ingest (inventories/utils.py:58-88)
+# ======================================================================
+_LINE_WIDTH = 10.0
+
+
+def q_gpkg_lines(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from emiproc_spark import fixtures as fx
+    from emiproc_spark.functions.geometry import wkb_linestring
+    from emiproc_spark.sources.geopackage import (
+        export_to_geopackage,
+        from_geopackage,
+    )
+
+    nat = (
+        fx.load(spark, sf_dir, "nation")
+        .select("n_nationkey")
+        .toPandas()
+        .sort_values("n_nationkey")
+        .reset_index(drop=True)
+    )
+    # horizontal segments at integer coordinates: every buffered vertex
+    # is exact, so the shoelace area is the closed form bit-for-bit
+    pdf = pd.DataFrame(
+        {
+            "geometry": [
+                wkb_linestring(
+                    [(0.0, float(k)), (10.0 * (k + 1), float(k))]
+                )
+                for k in nat["n_nationkey"]
+            ],
+            "Shape_Length": [10.0 * (k + 1) for k in nat["n_nationkey"]],
+            "Emission_CO2": nat["n_nationkey"] * 2.0,
+        }
+    )
+    layer = (
+        spark.createDataFrame(pdf)
+        .coalesce(1)
+        .sortWithinPartitions("Shape_Length")
+    )
+    path = os.path.join(fx.scratch_dir("emiproc_gpkgl_"), "lines.gpkg")
+    export_to_geopackage({"traffic_lines": layer}, path)
+    out = from_geopackage(spark, path, line_width=_LINE_WIDTH)
+
+    @F.pandas_udf("double")
+    def poly_area(geoms: pd.Series) -> pd.Series:
+        import numpy as np
+
+        from emiproc_spark.functions import geometry as geom
+
+        return pd.Series(
+            [
+                abs(geom.shoelace_area(np.asarray(geom.parse_wkb(bytes(b))[1][0])))
+                for b in geoms
+            ]
+        )
+
     return out.select(
         "category",
-        "pos",
-        F.col("z.heights_top_m").alias("height_top_m"),
-        qd("z.ratios").alias("ratio"),
+        "source_id",
+        "substance",
+        "value_kg_y",
+        qd(poly_area("geometry")).alias("area"),
     )
 
 
-SQL_VPROFILES_CSV = """
-    WITH rows(category, pos, height_top_m, v) AS (VALUES
-        ('traffic', 0, 20.0, 10.0), ('traffic', 1, 92.0, 0.0),
-        ('traffic', 2, 184.0, 0.0),
-        ('industry', 0, 20.0, 1.0), ('industry', 1, 92.0, 4.0),
-        ('industry', 2, 184.0, 5.0))
-    SELECT category, pos, height_top_m,
-           {qd} AS ratio
-    FROM rows
-""".format(qd=sql_qd("v / SUM(v) OVER (PARTITION BY category)"))
+SQL_GPKG_LINES = f"""
+    SELECT 'traffic_lines' AS category, n_nationkey + 1 AS source_id,
+           'CO2' AS substance, n_nationkey * 2.0 AS value_kg_y,
+           {sql_qd(f"(10.0 * (n_nationkey + 1) + 2 * {_LINE_WIDTH}) * 2 * {_LINE_WIDTH}")} AS area
+    FROM nation
+"""
 
 
-QUERIES_IO["tprofiles_csv"] = q_tprofiles_csv
-ORACLES_IO["tprofiles_csv"] = SQL_TPROFILES_CSV
-QUERIES_IO["vprofiles_csv"] = q_vprofiles_csv
-ORACLES_IO["vprofiles_csv"] = SQL_VPROFILES_CSV
+# ======================================================================
+# cf_attrs — nc_cf_attributes read-back (reference exports/netcdf.py:6-69)
+# ======================================================================
+_CF_FIELDS = {
+    "title": "r5 attrs check",
+    "author": "emiproc_spark",
+    "institution": "driver",
+    "source": "sf fixtures",
+    "comment": "cf attrs oracle",
+    "references": "SURVEY.md",
+}
+
+
+def q_cf_attrs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    import pandas as pd
+
+    from emiproc_spark import fixtures as fx
+    from emiproc_spark.exports.netcdf import (
+        cf_global_attributes,
+        export_raster_netcdf,
+    )
+    from emiproc_spark.qhelpers import sumd
+
+    agg = (
+        fx.emissions(spark, sf_dir)
+        .groupBy("cell_id", "category", "substance")
+        .agg(sumd("value_kg_y").alias("value_kg_y"))
+    )
+    out = os.path.join(fx.scratch_dir("emiproc_cf_"), "inv.nc")
+    export_raster_netcdf(
+        agg,
+        _raster_grid(spark),
+        out,
+        add_totals=False,
+        netcdf_attributes=cf_global_attributes(**_CF_FIELDS),
+    )
+
+    files = spark.read.format("binaryFile").load(out).select("content")
+
+    def attrs(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        from emiproc_spark.functions.netcdf3 import read_netcdf
+
+        for pdf in batches:
+            for content in pdf["content"]:
+                ds = read_netcdf(bytes(content), header_only=True)
+                rows = [
+                    {"key": k, "value": str(ds.attrs[k])}
+                    for k in sorted(_CF_FIELDS)
+                    if k in ds.attrs
+                ]
+                rows.append(
+                    {
+                        "key": "Conventions",
+                        "value": str(ds.attrs.get("Conventions", "")),
+                    }
+                )
+                # timestamped fields: presence + stamp-format markers
+                rows.append(
+                    {
+                        "key": "history_stamped",
+                        "value": str(
+                            "created by emiproc_spark"
+                            in str(ds.attrs.get("history", ""))
+                        ).lower(),
+                    }
+                )
+                rows.append(
+                    {
+                        "key": "created_is_iso",
+                        "value": str(
+                            str(ds.attrs.get("created", "")).count("-") >= 2
+                            and "T" in str(ds.attrs.get("created", ""))
+                        ).lower(),
+                    }
+                )
+                yield pd.DataFrame(rows, columns=["key", "value"])
+
+    return files.mapInPandas(attrs, "key string, value string")
+
+
+def _sql_cf_attrs() -> str:
+    vals = ", ".join(f"('{k}', '{v}')" for k, v in sorted(_CF_FIELDS.items()))
+    return f"""
+        SELECT key, value FROM (VALUES
+            {vals},
+            ('Conventions', 'CF-1.10'),
+            ('history_stamped', 'true'),
+            ('created_is_iso', 'true')
+        ) t(key, value)
+    """
+
+
+# ======================================================================
+# wav_cycle — WAV codec round-trip + audio features (functions/wav.py)
+# ======================================================================
+WAV_RATE = 8000
+
+
+def q_wav_cycle(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Encode a deterministic int16 waveform per doc through the
+    pure-numpy WAV codec, decode it back with the same codec inside
+    ``audio_features`` (mapInPandas), and emit exact-integer stats; the
+    oracle recomputes every stat arithmetically from the sample formula
+    — the codec must be lossless for the hashes to match.
+    """
+    import numpy as np
+    import pandas as pd
+
+    from emiproc_spark.functions.wav import encode_wav
+    from emiproc_spark.operators.multimodal import audio_features
+
+    ids = fx.load(spark, sf_dir, "documents").select("doc_id").where(
+        F.col("doc_id") < 200
+    )
+
+    def gen(batches):
+        for pdf in batches:
+            rows = []
+            for doc_id in pdf["doc_id"]:
+                d = int(doc_id)
+                n = 160 + (d % 7) * 40
+                i = np.arange(n, dtype=np.int64)
+                samples = ((d * 31 + i * 17) % 2048 - 1024).astype(np.int16)
+                rows.append({"doc_id": d, "payload": encode_wav(samples, WAV_RATE)})
+            yield pd.DataFrame(rows, columns=["doc_id", "payload"])
+
+    media = ids.mapInPandas(gen, schema="doc_id long, payload binary")
+    return audio_features(media)
+
+
+SQL_WAV_CYCLE = f"""
+    WITH ids AS (SELECT doc_id FROM documents WHERE doc_id < 200),
+    s AS (
+        SELECT ids.doc_id,
+               t.i,
+               ((ids.doc_id * 31 + t.i * 17) % 2048) - 1024 AS v
+        FROM ids,
+             UNNEST(range(160 + (ids.doc_id % 7) * 40)) AS t(i)
+    ),
+    sgn AS (
+        SELECT doc_id, i, CASE WHEN v > 0 THEN 1 ELSE -1 END AS g
+        FROM s WHERE v <> 0
+    ),
+    zc AS (
+        SELECT doc_id,
+               CAST(COALESCE(SUM(CASE WHEN flip THEN 1 ELSE 0 END), 0)
+                    AS BIGINT) AS n
+        FROM (SELECT doc_id,
+                     g <> LAG(g) OVER (PARTITION BY doc_id ORDER BY i) AS flip
+              FROM sgn)
+        GROUP BY doc_id
+    )
+    SELECT s.doc_id,
+           {WAV_RATE} AS sample_rate,
+           COUNT(*) AS n_samples,
+           1 AS channels,
+           COUNT(*) / {WAV_RATE}.0 AS duration_s,
+           CAST(MAX(ABS(v)) AS INT) AS peak,
+           CAST(SUM(v * v) AS BIGINT) AS sum_sq,
+           CAST(COALESCE(MIN(zc.n), 0) AS BIGINT) AS zero_crossings
+    FROM s LEFT JOIN zc ON zc.doc_id = s.doc_id
+    GROUP BY s.doc_id
+"""
+
+
+# ======================================================================
+# image_resize — decode → nearest-neighbor resize → stats (multimodal)
+# ======================================================================
+RS_N, RS_SIDE, RS_H, RS_W = 300, 24, 10, 6
+
+
+def q_image_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Real decode + resize path: deterministic 24x24 grey PNGs decoded
+    through the pure-numpy codec, nearest-neighbor resized to 10x6 with
+    the exact integer index map (src = (dst*24)//10), stats of the
+    RESIZED pixels emitted.  The oracle recomputes the sampled pixel
+    lattice arithmetically — codec and resize must both be exact for
+    the hashes to match."""
+    import numpy as np
+    import pandas as pd
+
+    def run(batches):
+        from emiproc_spark.functions.png import write_png
+
+        for pdf in batches:
+            rows = []
+            for doc_id in pdf["id"]:
+                i = int(doc_id)
+                px = (
+                    (i * 31 + np.arange(RS_SIDE * RS_SIDE)) % 256
+                ).astype(np.uint8).reshape(RS_SIDE, RS_SIDE)
+                rows.append({"doc_id": i, "payload": write_png(px)})
+            yield pd.DataFrame(rows, columns=["doc_id", "payload"])
+
+    from emiproc_spark.operators.multimodal import resize_features
+
+    media = spark.range(RS_N).mapInPandas(run, "doc_id long, payload binary")
+    return resize_features(media, RS_H, RS_W)
+
+
+SQL_IMAGE_RESIZE = f"""
+    WITH px AS (
+        SELECT d.i AS doc_id,
+               (d.i * 31 + ((r.r * {RS_SIDE}) // {RS_H}) * {RS_SIDE}
+                         + ((c.c * {RS_SIDE}) // {RS_W})) % 256 AS v
+        FROM range({RS_N}) d(i), range({RS_H}) r(r), range({RS_W}) c(c)
+    )
+    SELECT doc_id,
+           {RS_H} AS out_h, {RS_W} AS out_w,
+           CAST({RS_H * RS_W} AS BIGINT) AS n_px,
+           CAST(SUM(v) % 1000003 AS BIGINT) AS checksum,
+           CAST(SUM(v) AS DOUBLE) / {RS_H * RS_W} AS mean_byte
+    FROM px GROUP BY doc_id
+"""
+
+
+# ======================================================================
+# orc_partitioned — hive-partitioned ORC round-trip (exports/store.py)
+# ======================================================================
+ORC_LANGS = ("en", "de", "fr")
+
+# sf_dir -> written ORC dir (write once per session per sf_dir — the
+# benchmark times the pruned read, not the sink)
+_ORC_DIRS: dict[str, str] = {}
+
+
+def q_orc_partitioned(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """documents → lang-partitioned ORC → pruned read of 3 of 5
+    partitions → per-lang rollup.  Integer sums only (n_chars), so the
+    round-trip is exact; the oracle reads the source parquet with the
+    same predicate."""
+    from emiproc_spark.exports.store import read_partitioned, save_partitioned
+
+    path = _ORC_DIRS.get(sf_dir)
+    if path is None or not os.path.isdir(path):
+        tag = re.sub(r"\W+", "_", sf_dir).strip("_")
+        path = os.path.join(
+            fx.scratch_dir("emiproc_orc_"), f"docs_{tag}"
+        )
+        docs = fx.load(spark, sf_dir, "documents").select(
+            "doc_id", "n_chars", "lang"
+        )
+        save_partitioned(docs, path, ["lang"], fmt="orc")
+        _ORC_DIRS[sf_dir] = path
+
+    back = read_partitioned(spark, path, fmt="orc")
+    return (
+        back.where(F.col("lang").isin(*ORC_LANGS))
+        .groupBy("lang")
+        .agg(
+            F.count("*").alias("n_docs"),
+            F.sum("n_chars").alias("total_chars"),
+        )
+    )
+
+
+_ORC_LANG_LIST = ", ".join(f"'{lang}'" for lang in ORC_LANGS)
+SQL_ORC_PARTITIONED = f"""
+    SELECT lang, COUNT(*) AS n_docs,
+           CAST(SUM(n_chars) AS BIGINT) AS total_chars
+    FROM documents
+    WHERE lang IN ({_ORC_LANG_LIST})
+    GROUP BY lang
+"""
+
+
+# ======================================================================
+# jsonl_roundtrip — JSON-lines sink + schema-explicit source
+# ======================================================================
+_JSONL_DIRS: dict[str, str] = {}
+
+
+def q_jsonl_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
+    path = _JSONL_DIRS.get(sf_dir)
+    if path is None or not os.path.isdir(path):
+        tag = re.sub(r"\W+", "_", sf_dir).strip("_")
+        path = os.path.join(
+            fx.scratch_dir("emiproc_jsonl_"), f"docs_{tag}"
+        )
+        fx.load(spark, sf_dir, "documents").select(
+            "doc_id", "lang", "text"
+        ).write.mode("overwrite").json(path)
+        _JSONL_DIRS[sf_dir] = path
+    # explicit schema: inference would cost a second full scan, and at
+    # 100 TB the contract should come from the catalog, not the data
+    back = spark.read.schema("doc_id long, lang string, text string").json(
+        path
+    )
+    return back.select(
+        "doc_id",
+        "lang",
+        F.length("text").cast("long").alias("text_chars"),
+    )
+
+
+SQL_JSONL_ROUNDTRIP = """
+    SELECT doc_id, lang, CAST(length(text) AS BIGINT) AS text_chars
+    FROM documents
+"""
+
+
+QUERIES = {
+    "netcdf_ingest": (q_netcdf_ingest, SQL_NETCDF_INGEST),
+    "tno_ingest": (q_tno_ingest, SQL_TNO_INGEST),
+    "tno_points": (q_tno_points, SQL_TNO_POINTS),
+    "gpkg_roundtrip": (q_gpkg_roundtrip, SQL_GPKG_ROUNDTRIP),
+    "gral_roundtrip": (q_gral_roundtrip, SQL_GRAL_ROUNDTRIP),
+    "swiss_ingest": (q_swiss_ingest, SQL_SWISS_INGEST),
+    "prtr_ingest": (q_prtr_ingest, SQL_PRTR_INGEST),
+    "lpj_ingest": (q_lpj_ingest, SQL_LPJ_INGEST),
+    "edgar_ingest": (q_edgar_ingest, SQL_EDGAR_INGEST),
+    "cams_ingest": (q_cams_ingest, SQL_CAMS_INGEST),
+    "gfas_ingest": (q_gfas_ingest, SQL_GFAS_INGEST),
+    "saunois_ingest": (q_saunois_ingest, SQL_SAUNOIS_INGEST),
+    "edgar_legacy": (q_edgar_legacy, SQL_EDGAR_LEGACY),
+    "wetcharts_ingest": (q_wetcharts_ingest, SQL_WETCHARTS_INGEST),
+    "gfed5_ingest": (q_gfed5_ingest, SQL_GFED5_INGEST),
+    "wrf_flux": (q_wrf_flux, SQL_WRF_FLUX),
+    "from_duckdb": (q_from_duckdb, SQL_FROM_DUCKDB),
+    "osm_ways": (q_osm_ways, SQL_OSM_WAYS),
+    "shapefile_regions": (q_shapefile_regions, SQL_SHAPEFILE_REGIONS),
+    "fluxie_export": (q_fluxie_export, SQL_FLUXIE_EXPORT),
+    "netcdf4_ingest": (q_netcdf4_ingest, SQL_NETCDF4_INGEST),
+    "gfed4_ingest": (q_gfed4_ingest, SQL_GFED4_INGEST),
+    "png_cycle": (q_png_cycle, SQL_PNG_CYCLE),
+    "gpkg_lines": (q_gpkg_lines, SQL_GPKG_LINES),
+    "cf_attrs": (q_cf_attrs, _sql_cf_attrs()),
+    "wav_cycle": (q_wav_cycle, SQL_WAV_CYCLE),
+    "image_resize": (q_image_resize, SQL_IMAGE_RESIZE),
+    "orc_partitioned": (q_orc_partitioned, SQL_ORC_PARTITIONED),
+    "jsonl_roundtrip": (q_jsonl_roundtrip, SQL_JSONL_ROUNDTRIP),
+}

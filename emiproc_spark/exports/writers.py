@@ -208,12 +208,3 @@ def export_text_formatted(
     df.select(F.concat_ws(sep, *parts).alias("value")).write.mode(
         "overwrite"
     ).text(path)
-
-
-def export_netcdf(emissions: DataFrame, grid: DataFrame, path: str, **kwargs) -> str:
-    """NetCDF raster export — real implementation in
-    :mod:`emiproc_spark.exports.netcdf` on the pure-numpy NetCDF-3
-    codec (no xarray needed)."""
-    from emiproc_spark.exports.netcdf import export_raster_netcdf
-
-    return export_raster_netcdf(emissions, grid, path, **kwargs)

@@ -135,14 +135,3 @@ def _hex_wkb(cx: pd.Series, cy: pd.Series, size: pd.Series) -> pd.Series:
         ]
         out.append(wkb_polygon(ring))
     return pd.Series(out, dtype=object)
-
-
-def clip_box_grid(grid: DataFrame, xmin: float, ymin: float, xmax: float, ymax: float) -> DataFrame:
-    """Cells whose bbox intersects the window — pure predicate, partition
-    prunable (reference clip_box, emiproc/inventories/utils.py:888-954)."""
-    return grid.where(
-        (F.col("xmax") > F.lit(xmin))
-        & (F.col("xmin") < F.lit(xmax))
-        & (F.col("ymax") > F.lit(ymin))
-        & (F.col("ymin") < F.lit(ymax))
-    )

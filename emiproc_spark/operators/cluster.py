@@ -29,7 +29,6 @@ def connected_components(
     b_col: str = "doc_b",
     max_iter: int = 25,
     reliable_checkpoints: bool = False,
-    probe_every: int = 1,
 ) -> DataFrame:
     """Label every node of the pair graph with its component id (the
     minimum node id reachable from it).
@@ -37,19 +36,6 @@ def connected_components(
     Returns ``(node, component)`` — one row per distinct node appearing
     in ``pairs``.  Isolated docs (no pair) are absent; join back to the
     corpus with a left join + ``coalesce(component, doc_id)``.
-
-    ``probe_every``: run the convergence probe (a driver job) every K
-    rounds instead of every round.  The fixpoint is STABLE — a round
-    executed after convergence is the identity on labels — so any
-    probing schedule returns identical components; a probe is also
-    always run on the final permitted round so the non-convergence
-    error cannot be masked.  K>1 trades at most K−1 identity rounds
-    executed after the real fixpoint for K−1 fewer probe jobs per K
-    rounds.  Measured at sf0.1/local[32] (r13): a WASH on wall time
-    and a net job-count INCREASE (the extra identity round spawns more
-    AQE stage-jobs than the probes it saves), so the default stays 1;
-    the knob exists for graphs whose diameter makes rounds cheap and
-    probes comparatively expensive (many rounds, tiny label relation).
 
     Lineage is truncated per round with ``localCheckpoint`` (executor
     block storage) — fast, but rounds recompute from scratch if an
@@ -61,8 +47,6 @@ def connected_components(
     ``spark.cleaner.referenceTracking.cleanCheckpoints=true`` to have
     superseded checkpoint files garbage-collected with their RDDs.
     """
-    if probe_every < 1:
-        raise ValueError(f"probe_every must be >= 1, got {probe_every}")
     cached: list[DataFrame] = []
 
     def _truncate(df: DataFrame) -> DataFrame:
@@ -183,15 +167,12 @@ def connected_components(
                 )
             )
         # lazy checkpoint: the convergence probe is the action that
-        # materializes it — an UNPROBED round's checkpoint materializes
-        # as lineage of the next probed round, so K rounds share one
-        # driver job instead of paying a job-gap each
+        # materializes it
         new_labels = _truncate(jumped)
         labels = new_labels.select("src", "component")
-        if rnd % probe_every == probe_every - 1 or rnd == max_iter - 1:
-            changed = new_labels.where(F.col("__chg")).limit(1).count()
-            if changed == 0:
-                break
+        changed = new_labels.where(F.col("__chg")).limit(1).count()
+        if changed == 0:
+            break
     else:
         # silent partial convergence would leave non-minimal component
         # ids — dedup_keep_representative would then retain several

@@ -49,7 +49,9 @@ def _canon(df: pd.DataFrame) -> list[tuple]:
             else:
                 canon_row.append(str(v))
         rows.append(tuple(canon_row))
-    return sorted(rows)
+    # NULL sorts first in each column, so a NULL/string tie between two
+    # rows never compares None with str
+    return sorted(rows, key=lambda row: [(v is not None, v) for v in row])
 
 
 def compare(

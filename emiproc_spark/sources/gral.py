@@ -45,25 +45,6 @@ _SCHEMA = (
 )
 
 
-def _scan_dat(
-    spark: SparkSession, path: str, skip: int, decode
-) -> DataFrame:
-    files = spark.read.format("binaryFile").load(path).select("content")
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import io
-
-        for pdf in batches:
-            for content in pdf["content"]:
-                df = pd.read_csv(
-                    io.BytesIO(bytes(content)), header=skip, index_col=False
-                )
-                if len(df):
-                    yield decode(df)
-
-    return files.mapInPandas(run, schema=_SCHEMA)
-
-
 def _decode_points(df: pd.DataFrame) -> pd.DataFrame:
         c = df.columns
         x = df[c[PT_X]].to_numpy(dtype=np.float64)
@@ -80,11 +61,6 @@ def _decode_points(df: pd.DataFrame) -> pd.DataFrame:
                 "vertical_extension": np.zeros(len(df)),
             }
         )
-
-def gral_point_sources(spark: SparkSession, path: str) -> DataFrame:
-    """``point.dat`` → point WKB + kg/y + stack EmissionInfo fields
-    (reference _read_points, gral.py:164-199)."""
-    return _scan_dat(spark, path, 1, _decode_points)
 
 
 def _decode_lines(df: pd.DataFrame) -> pd.DataFrame:
@@ -114,11 +90,6 @@ def _decode_lines(df: pd.DataFrame) -> pd.DataFrame:
             }
         )
 
-def gral_line_sources(spark: SparkSession, path: str) -> DataFrame:
-    """``line.dat`` → segment WKB + kg/y (rate × hours × km, reference
-    _read_lines, gral.py:200-250)."""
-    return _scan_dat(spark, path, 4, _decode_lines)
-
 
 def _decode_cadastre(df: pd.DataFrame) -> pd.DataFrame:
         c = df.columns
@@ -144,13 +115,9 @@ def _decode_cadastre(df: pd.DataFrame) -> pd.DataFrame:
             }
         )
 
-def gral_cadastre_sources(spark: SparkSession, path: str) -> DataFrame:
-    """``cadastre.dat`` → axis-aligned square polygons + kg/y
-    (reference _read_cadastre, gral.py:252-317)."""
-    return _scan_dat(spark, path, 0, _decode_cadastre)
 
-
-# file name → (junk lines before header row, decoder)
+# file name → (junk lines before header row, decoder); reference
+# _read_points/_read_lines/_read_cadastre, gral.py:164-317
 DAT_DECODERS = {
     "point.dat": (1, _decode_points),
     "line.dat": (4, _decode_lines),

@@ -36,7 +36,7 @@ def test_query_matches_oracle(spark, sf_dir, name):
     assert r["values_match"], r
     # a 0-row match passes while checking nothing — every query is
     # designed to produce rows even at sf0.001 (doc_sample/data_mix once
-    # silently matched empty for a full round; see driver_queries_curate)
+    # silently matched empty for a full round; see driver_queries.text)
     assert r["spark_rows"] > 0, f"{name}: trivially-empty oracle match"
 
 

@@ -41,7 +41,7 @@ def tprofiles(spark):
 
 @pytest.fixture(scope="module")
 def tno_path(spark):
-    from emiproc_spark.driver_queries_io import _tno_fixture
+    from emiproc_spark.driver_queries.formats import _tno_fixture
 
     return _tno_fixture(spark, SF_DIR)
 
@@ -99,7 +99,7 @@ def test_ep1_ingest_remap_group_speciate_conserves(spark, ingested):
 
 
 def test_ep2_raster_export_roundtrip(spark, ingested):
-    from emiproc_spark.driver_queries_io import _raster_grid
+    from emiproc_spark.driver_queries.formats import _raster_grid
     from emiproc_spark.exports.netcdf import export_raster_netcdf
     from emiproc_spark.sources.netcdf import from_netcdf_rasters
 

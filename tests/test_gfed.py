@@ -80,7 +80,7 @@ def test_gfed4_builtin_codec_end_to_end(spark, tmp_path):
     import pytest as _p
     from pyspark.sql import functions as F
 
-    from emiproc_spark.driver_queries_r3c import (
+    from emiproc_spark.driver_queries.formats import (
         GFED_NLAT,
         _write_gfed4_fixture,
     )

@@ -182,7 +182,7 @@ def test_raster_export_netcdf4_container_roundtrip(spark):
 
     from pyspark.sql import functions as F
 
-    from emiproc_spark.driver_queries_io import _raster_grid
+    from emiproc_spark.driver_queries.formats import _raster_grid
     from emiproc_spark.exports.netcdf import export_raster_netcdf
     from emiproc_spark.sources.netcdf import from_netcdf_rasters
 

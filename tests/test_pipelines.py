@@ -16,7 +16,7 @@ from emiproc_spark.sources.tno import tno_area_emissions, tno_point_sources
 
 @pytest.fixture(scope="module")
 def tno_path(spark):
-    from emiproc_spark.driver_queries_io import _tno_fixture
+    from emiproc_spark.driver_queries.formats import _tno_fixture
 
     return _tno_fixture(spark, "/root/testdata/sf0.001")
 
@@ -281,7 +281,7 @@ def test_edgar_to_hourly_country_profiles(spark, tmp_path):
     the composite (weekly × hour-of-week-per-month) factor."""
     import numpy as np
 
-    from emiproc_spark.driver_queries_r3c import _write_edgar_aux
+    from emiproc_spark.driver_queries.profiles import _write_edgar_aux
     from emiproc_spark.functions.netcdf3 import NCDataset, NCVariable, read_netcdf, write_netcdf
     from emiproc_spark.sources.edgar_profiles import edgar_auxiliary_profiles
 

@@ -369,62 +369,63 @@ def test_no_unbounded_global_window(spark, name):
 # ----------------------------------------------------------------------
 _BROADCAST_HINT_ALLOWED = {
     # (module, enclosing function): (site count, bounded because…)
-    ("driver_queries.py", "q_revenue_by_nation"): (
+    ("relational.py", "q_revenue_by_nation"): (
         2, "nation (25 rows) and region (5 rows) are fixed dimensions"),
-    ("driver_queries.py", "q_group_categories"): (
+    ("relational.py", "q_nation_topk"): (
+        1, "nation dimension (25 rows)"),
+    ("inventory.py", "q_group_categories"): (
         1, "literal category→group map, a handful of rows"),
-    ("driver_queries.py", "q_group_substances"): (
+    ("inventory.py", "q_group_substances"): (
         1, "literal substance→group map, a handful of rows"),
-    ("driver_queries.py", "q_remap_inventory"): (
+    ("inventory.py", "q_remap_inventory"): (
         1, "rect-rect weights over the fixed test grids — grid-dimension"
            "-sized, never corpus-sized"),
-    ("driver_queries.py", "q_profiles_combine"): (
-        1, "literal 3-row category→group map"),
-    ("driver_queries.py", "q_hdd_factors"): (
-        1, "single-row global mean scaffold"),
-    ("driver_queries.py", "q_composite_scaling"): (
-        1, "literal 2-row profile table"),
-    ("driver_queries_curate.py", "q_decontaminate"): (
-        1, "eval benchmark set — bounded by the benchmark, not the corpus"),
-    ("driver_queries_r3b.py", "q_icon_mesh"): (
+    ("inventory.py", "q_icon_mesh"): (
         1, "poly-poly weights over the fixed ICON mesh × test grid"),
-    ("driver_queries_r3c.py", "q_decon_spans"): (
-        1, "eval span set — benchmark-bounded"),
-    ("driver_queries_r5.py", "q_specific_day_sf"): (
+    ("inventory.py", "q_remap_gate"): (
+        1, "rect-rect weights over the fixed test grids"),
+    ("profiles.py", "q_profiles_combine"): (
+        1, "literal 3-row category→group map"),
+    ("profiles.py", "q_hdd_factors"): (
+        1, "single-row global mean scaffold"),
+    ("profiles.py", "q_composite_scaling"): (
+        1, "literal 2-row profile table"),
+    ("profiles.py", "q_specific_day_sf"): (
         1, "temporal-profile dimension table"),
-    ("driver_queries_r5.py", "q_ann_multiprobe"): (
-        2, "query vectors (k rows) and their probe cells (k×nprobe)"),
-    ("driver_queries_r5b.py", "q_bloom_decon"): (
+    ("text.py", "q_decontaminate"): (
+        1, "eval benchmark set — bounded by the benchmark, not the corpus"),
+    ("text.py", "q_decon_spans"): (
+        1, "eval span set — benchmark-bounded"),
+    ("text.py", "q_bloom_decon"): (
         1, "eval n-gram filter — benchmark-bounded"),
-    ("driver_queries_r5c.py", "q_stream_heavy"): (
-        1, "heavy-hitter candidate ids — bounded by stream state size"),
-    ("driver_queries_r5e.py", "q_semdedup"): (
-        1, "centroid terms — k×dim rows"),
-    ("driver_queries_r5h.py", "q_ivf_store_probe"): (
-        1, "probe-cell set for the query batch — k×nprobe rows"),
-    ("driver_queries_r5h.py", "q_nation_topk"): (
-        1, "nation dimension (25 rows)"),
-    ("driver_queries_r6.py", "q_ann_recall"): (
-        2, "query positions (k rows) and probe cells (k×nprobe)"),
-    ("driver_queries_r6.py", "curate_stage_store"): (
+    ("text.py", "curate_stage_store"): (
         1, "eval-doc frame for planted contamination — benchmark-bounded"
            " in production (a fixed held-out suite)"),
-    ("driver_queries_r7.py", "q_remap_gate"): (
-        1, "rect-rect weights over the fixed test grids"),
-    ("driver_queries_text.py", "q_ann_cosine_topk"): (
+    ("similarity.py", "q_semdedup"): (
+        1, "centroid terms — k×dim rows"),
+    ("retrieval.py", "q_ann_multiprobe"): (
+        2, "query vectors (k rows) and their probe cells (k×nprobe)"),
+    ("retrieval.py", "q_ivf_store_probe"): (
+        1, "probe-cell set for the query batch — k×nprobe rows"),
+    ("retrieval.py", "q_ann_recall"): (
+        2, "query positions (k rows) and probe cells (k×nprobe)"),
+    ("retrieval.py", "q_ann_cosine_topk"): (
         1, "query-vector batch (k rows)"),
-    ("driver_queries_text.py", "ivf_scored"): (
+    ("retrieval.py", "ivf_scored"): (
         1, "IVF centroid terms — k×dim rows"),
-    ("driver_queries_text.py", "q_ivf_topk"): (
+    ("retrieval.py", "q_ivf_topk"): (
         2, "query vectors and centroid assignments — k-bounded"),
-    ("driver_queries_text.py", "q_ann_lsh_buckets"): (
+    ("retrieval.py", "q_ann_lsh_buckets"): (
         1, "query-vector batch (k rows)"),
+    ("streaming.py", "q_stream_heavy"): (
+        1, "heavy-hitter candidate ids — bounded by stream state size"),
 }
 
 
 def _broadcast_call_sites():
     """(module, enclosing function) → count of ``*.broadcast(...)``
-    call expressions, via AST over every driver-query module."""
+    call expressions, via AST over every module of the driver_queries
+    package."""
     import ast
     import collections
     import glob
@@ -432,9 +433,9 @@ def _broadcast_call_sites():
 
     import emiproc_spark
 
-    pkg = os.path.dirname(emiproc_spark.__file__)
+    pkg = os.path.join(os.path.dirname(emiproc_spark.__file__), "driver_queries")
     sites = collections.Counter()
-    for path in sorted(glob.glob(os.path.join(pkg, "driver_queries*.py"))):
+    for path in sorted(glob.glob(os.path.join(pkg, "*.py"))):
         tree = ast.parse(open(path).read())
         spans = [
             (n.lineno, n.end_lineno, n.name)
@@ -459,6 +460,11 @@ def _broadcast_call_sites():
 
 def test_broadcast_hints_reviewed():
     sites = _broadcast_call_sites()
+    # the scan must see every module the allowlist names — a path
+    # mismatch would otherwise pass with zero sites found
+    scanned = {mod for mod, _ in sites}
+    unscanned = {mod for mod, _ in _BROADCAST_HINT_ALLOWED} - scanned
+    assert not unscanned, f"no broadcast sites found in {unscanned}"
     unreviewed = {
         k: n
         for k, n in sites.items()
