@@ -49,6 +49,9 @@ _REVERIFY = [
     "robust_outliers", "group_quantiles", "winnow_fp", "winnow_overlap",
     "dup_spans", "dup_fraction", "speciate", "merge_indexes",
     "broadcast_types", "specific_days",
+    # the raster and fluxie exports ask the grid in one task
+    # (exports.netcdf.scan_raster_grid)
+    "netcdf_ingest", "fluxie_export", "netcdf4_ingest", "cf_attrs",
 ]
 
 

@@ -74,22 +74,12 @@ def export_fluxie(
     if len(set(years)) != len(years) or not years:
         raise ValueError(f"need distinct inventory years, got {years}")
 
-    # coordinate arrays + density check in ONE aggregate job
-    row = grid.agg(
-        F.count("*").alias("n"),
-        F.collect_set("lon").alias("lons"),
-        F.collect_set("lat").alias("lats"),
-    ).collect()[0]
-    lons = np.sort(np.array(row["lons"], dtype=float))
-    lats = np.sort(np.array(row["lats"], dtype=float))
-    nlon, nlat = lons.size, lats.size
-    if nlon * nlat != row["n"]:
-        raise ValueError("grid is not a dense regular raster")
-    # the scatter below assumes cell_id = lon_i*nlat + lat_i, axes
-    # ascending — verify instead of silently mirroring other layouts
-    from emiproc_spark.exports.netcdf import validate_lonmajor_grid
+    # axes + density and lon-major checks (the scatter below assumes
+    # cell_id = lon_i*nlat + lat_i, axes ascending) in ONE grid task
+    from emiproc_spark.exports.netcdf import scan_raster_grid
 
-    validate_lonmajor_grid(grid, lats, lons)
+    lons, lats = scan_raster_grid(grid)
+    nlon, nlat = lons.size, lats.size
 
     import tempfile
 

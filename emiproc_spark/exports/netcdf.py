@@ -122,88 +122,78 @@ def _coord_vars(lon_c: np.ndarray, lat_c: np.ndarray, lon_name: str, lat_name: s
     ]
 
 
-def validate_lonmajor_grid(grid: DataFrame, lats, lons) -> None:
-    """Distributed check that ``cell_id == lon_i * nlat + lat_i`` with
-    ascending sorted axes — the layout the executor-side slab scatter
-    assumes.  A grid whose ids follow another convention (e.g. built
-    north-to-south) would otherwise silently mirror every raster
-    against its coordinate variables.  One map-only scan of the
-    dimension-sized grid (searchsorted against the broadcast axes, no
-    join, no shuffle); raises with an actionable message on the first
-    mismatch."""
+def scan_raster_grid(
+    grid: DataFrame, area_path: str | None = None
+) -> tuple[np.ndarray, np.ndarray]:
+    """Every question an export asks the grid, in ONE single-task pass:
+    returns the sorted ``(lon, lat)`` axes of a (cell_id, lon, lat
+    [, area_m2]) grid after checking that it is a dense raster numbered
+    lon-major ascending (``cell_id == lon_i * nlat + lat_i``) — the
+    layout every executor-side slab scatter assumes.  A grid whose ids
+    follow another convention (e.g. built north-to-south) would
+    otherwise silently mirror every raster against its coordinate
+    variables.
+
+    With ``area_path`` the same task scatters ``area_m2`` into a dense
+    (nlat, nlon) ``.npy`` slab there, written only for a valid grid
+    (bounded by one raster, so the driver never collects the cell
+    table).  The task returns the axes, the cell count and the first
+    layout violation; the driver raises the named errors."""
     import pandas as pd
 
-    lat_c = np.sort(np.asarray(lats, dtype=float))
-    lon_c = np.sort(np.asarray(lons, dtype=float))
-    nlat = lat_c.size
+    cols = ["cell_id", "lon", "lat"] + (["area_m2"] if area_path else [])
 
-    def check(batches):
-        for pdf in batches:
-            lat_i = np.searchsorted(lat_c, pdf["lat"].to_numpy())
-            lon_i = np.searchsorted(lon_c, pdf["lon"].to_numpy())
-            expect = lon_i.astype(np.int64) * nlat + lat_i
-            bad = pdf["cell_id"].to_numpy() != expect
-            if bad.any():
-                out = pdf.loc[bad, ["cell_id", "lat", "lon"]].head(1).copy()
-                out["expect"] = expect[bad][:1]
-                yield out
-
-    hit = (
-        grid.select("cell_id", "lat", "lon")
-        .mapInPandas(check, "cell_id long, lat double, lon double, expect long")
-        .limit(1)
-        .collect()
-    )
-    if hit:
-        r = hit[0]
-        raise ValueError(
-            f"grid is not lon-major ascending: cell_id {r['cell_id']} sits at "
-            f"(lat {r['lat']}, lon {r['lon']}) = index {r['expect']}"
-            " — renumber the grid (cell_id = lon_i*nlat + lat_i, axes ascending)"
-            " before exporting"
-        )
-
-
-def write_area_slab(grid: DataFrame, lats, lons, dest_path: str) -> None:
-    """Scatter the grid's ``area_m2`` into a dense (nlat, nlon) ``.npy``
-    slab in ONE executor task (bounded by one raster, so the driver
-    never collects the cell table).  The same pass VALIDATES the
-    lon-major ascending layout the slab scatter assumes — it sees every
-    grid row, so a grid numbered differently (e.g. north-to-south)
-    fails loudly instead of silently mirroring every raster.  Shared by
-    the raster and hourly exporters."""
-    import pandas as pd
-
-    lat_c = np.sort(np.asarray(lats, dtype=float))
-    lon_c = np.sort(np.asarray(lons, dtype=float))
-    nlat, nlon = lat_c.size, lon_c.size
-
-    def write_area(pdf: pd.DataFrame) -> pd.DataFrame:
-        lat_i = np.searchsorted(lat_c, pdf["lat"].to_numpy())
-        lon_i = np.searchsorted(lon_c, pdf["lon"].to_numpy())
+    def grid_pass(pdf: pd.DataFrame) -> pd.DataFrame:
+        lon, lat = pdf["lon"].to_numpy(), pdf["lat"].to_numpy()
+        lon_c, lat_c = np.unique(lon), np.unique(lat)
+        nlat, nlon = lat_c.size, lon_c.size
+        out = {"lons": [lon_c], "lats": [lat_c], "n": [len(pdf)],
+               "bad_cell": [None], "bad_lat": [None], "bad_lon": [None],
+               "bad_expect": [None]}
+        if nlat * nlon != len(pdf):
+            return pd.DataFrame(out)
+        lat_i = np.searchsorted(lat_c, lat)
+        lon_i = np.searchsorted(lon_c, lon)
         cell = pdf["cell_id"].to_numpy()
         expect = lon_i.astype(np.int64) * nlat + lat_i
         bad = cell != expect
         if bad.any():
             k = int(np.argmax(bad))
-            raise ValueError(
-                f"grid is not lon-major ascending: cell_id {cell[k]} sits at "
-                f"(lat {pdf['lat'].iloc[k]}, lon {pdf['lon'].iloc[k]}) = index "
-                f"{expect[k]} — renumber the grid (cell_id = lon_i*nlat + "
-                "lat_i, axes ascending) before exporting"
-            )
-        arr = np.zeros((nlat, nlon))
-        arr[lat_i, lon_i] = pdf["area_m2"].to_numpy()
-        np.save(dest_path, arr)
-        return pd.DataFrame({"path": [dest_path]})
+            out.update(bad_cell=[int(cell[k])], bad_lat=[float(lat[k])],
+                       bad_lon=[float(lon[k])], bad_expect=[int(expect[k])])
+        elif area_path:
+            arr = np.zeros((nlat, nlon))
+            arr[lat_i, lon_i] = pdf["area_m2"].to_numpy()
+            np.save(area_path, arr)
+        return pd.DataFrame(out)
 
-    (
-        grid.select("cell_id", "lon", "lat", "area_m2")
+    rows = (
+        grid.select(*cols)
         .withColumn("_g", F.lit(0))
         .groupBy("_g")
-        .applyInPandas(write_area, "path string")
+        .applyInPandas(
+            grid_pass,
+            "lons array<double>, lats array<double>, n long, bad_cell long, "
+            "bad_lat double, bad_lon double, bad_expect long",
+        )
         .collect()
     )
+    # an empty grid has no group (and no raster)
+    if not rows:
+        raise ValueError("grid is not a dense regular raster")
+    r = rows[0]
+    lon_c = np.array(r["lons"], dtype=float)
+    lat_c = np.array(r["lats"], dtype=float)
+    if lon_c.size * lat_c.size != r["n"]:
+        raise ValueError("grid is not a dense regular raster")
+    if r["bad_cell"] is not None:
+        raise ValueError(
+            f"grid is not lon-major ascending: cell_id {r['bad_cell']} sits at "
+            f"(lat {r['bad_lat']}, lon {r['bad_lon']}) = index {r['bad_expect']}"
+            " — renumber the grid (cell_id = lon_i*nlat + lat_i, axes ascending)"
+            " before exporting"
+        )
+    return lon_c, lat_c
 
 
 _SLAB_CACHE: dict = {}
@@ -256,25 +246,16 @@ def export_raster_netcdf(
     if var_name_format is None:
         var_name_format = "{substance}" if group_categories else "{substance}_{category}"
 
-    # coordinate arrays + density check in ONE aggregate job (axes are
-    # nlon/nlat values — dimension-sized)
-    row = grid.agg(
-        F.count("*").alias("n"),
-        F.collect_set("lon").alias("lons"),
-        F.collect_set("lat").alias("lats"),
-    ).collect()[0]
-    lon_c = np.sort(np.array(row["lons"], dtype=float))
-    lat_c = np.sort(np.array(row["lats"], dtype=float))
-    nlon, nlat = lon_c.size, lat_c.size
-    if nlon * nlat != row["n"]:
-        raise ValueError("grid is not a dense regular raster")
-    # the lon-major layout check rides the area-slab task below (it sees
-    # every grid row), so no separate validation scan is needed
-
     out = path if path.endswith(".nc") else path + ".nc"
     slab_dir = out + ".slabs"
     os.makedirs(slab_dir, exist_ok=True)
     try:
+        # axes, density + lon-major checks and the cell_area slab in one
+        # grid task, before any emission slab is written
+        area_path = os.path.join(slab_dir, "cell_area.npy")
+        lon_c, lat_c = scan_raster_grid(grid, area_path)
+        nlon, nlat = lon_c.size, lat_c.size
+        area_grid = np.load(area_path)
 
         def slab_path(cat: str, sub: str) -> str:
             tag = hashlib.md5(f"{cat}\x00{sub}".encode()).hexdigest()[:16]
@@ -315,11 +296,6 @@ def export_raster_netcdf(
         )
         slab_of = {(r["category"], r["substance"]): r["path"] for r in meta}
         total_of = {(r["category"], r["substance"]): r["total_kg"] for r in meta}
-
-        # area slab + lon-major validation in one executor pass
-        area_path = os.path.join(slab_dir, "cell_area.npy")
-        write_area_slab(grid, lat_c, lon_c, area_path)
-        area_grid = np.load(area_path)
 
         categories = sorted({c for c, _ in slab_of})
         substances = sorted({s for _, s in slab_of})
@@ -554,10 +530,10 @@ def export_hourly_netcdf(
 
     Scale posture: the hourly expansion is NEVER materialized on the
     driver (and neither is the grid — same pattern as
-    ``export_raster_netcdf``): the axes come from ONE aggregate, the
-    ``cell_area`` raster is scattered and written executor-side as a
-    ``.npy`` slab (the same pass validates the lon-major ascending
-    ``cell_id = lon_i·nlat + lat_i`` layout), and each hour's dense
+    ``export_raster_netcdf``): ONE grid task (:func:`scan_raster_grid`)
+    returns the axes, validates the dense lon-major ascending
+    ``cell_id = lon_i·nlat + lat_i`` layout and writes the ``cell_area``
+    raster executor-side as a ``.npy`` slab, and each hour's dense
     raster is assembled and written executor-side
     (``groupBy(hour_index).applyInPandas``).  The only driver-side data
     are the two axis arrays, the dimension-sized (category, substance)
@@ -591,27 +567,17 @@ def export_hourly_netcdf(
 
     os.makedirs(out_dir, exist_ok=True)
     t0 = datetime.datetime.strptime(start, "%Y-%m-%d %H:%M:%S")
-    # axes + density check in ONE aggregate job — no grid.toPandas
-    row = grid.agg(
-        F.count("*").alias("n"),
-        F.collect_set("lon").alias("lons"),
-        F.collect_set("lat").alias("lats"),
-    ).collect()[0]
-    lons = np.sort(np.array(row["lons"], dtype=float))
-    lats = np.sort(np.array(row["lats"], dtype=float))
-    nlon, nlat = lons.size, lats.size
-    if nlon * nlat != row["n"]:
-        raise ValueError("grid is not a dense regular raster")
-    if (nx, ny) != (nlon, nlat):
-        raise ValueError(
-            f"grid axes are {nlon}×{nlat} (lon×lat) but nx={nx}, ny={ny}"
-        )
-
     slab_dir = tempfile.mkdtemp(prefix=".hourly_slabs_", dir=out_dir)
-    area_path = os.path.join(slab_dir, "cell_area.npy")
     try:
-        # area slab + lon-major validation in one executor pass
-        write_area_slab(grid, lats, lons, area_path)
+        # axes, density + lon-major checks and the cell_area slab in one
+        # grid task; a failed check still removes the slab dir (finally)
+        area_path = os.path.join(slab_dir, "cell_area.npy")
+        lons, lats = scan_raster_grid(grid, area_path)
+        nlon, nlat = lons.size, lats.size
+        if (nx, ny) != (nlon, nlat):
+            raise ValueError(
+                f"grid axes are {nlon}×{nlat} (lon×lat) but nx={nx}, ny={ny}"
+            )
 
         # dictionary-encode (category, substance) before the hour
         # shuffle (writers.dim_codes carries the sorted-order contract);
@@ -679,9 +645,9 @@ def export_hourly_netcdf(
         written = (
             coded.groupBy("hour_index")
             .applyInPandas(write_hour, "hour_index long, path string")
-            .orderBy("hour_index")
             .collect()
         )
     finally:
         shutil.rmtree(slab_dir, ignore_errors=True)
-    return [r["path"] for r in written]
+    # ≤ 8784 rows: sort on the driver, not with a range exchange
+    return [r["path"] for r in sorted(written, key=lambda r: r["hour_index"])]

@@ -250,6 +250,37 @@ def weights_poly_rect(src: DataFrame, dst_grid: DataFrame, tile: float) -> DataF
     )
 
 
+def weights_points_rect(points: DataFrame, dst_grid: DataFrame, tile: float) -> DataFrame:
+    """weights(src_id, dst_id, weight) for point sources onto rect cells
+    — :func:`weights_poly_rect`'s point rule in closed form, entirely
+    JVM-side (no WKB, no refine UDF).
+
+    ``points``: (source_id, x, y), one row per source.  A point's bbox
+    is degenerate (xmin = xmax = x), so the tile-candidate bbox filter
+    already IS the inclusive containment test ``xmin <= x <= xmax``,
+    ``ymin <= y <= ymax``; each of the n cells containing the point
+    gets 1/n (reference emiproc/regrid.py:277-285).  A point outside
+    every cell yields no row.
+    """
+    cand = tile_candidates(
+        points.select(
+            F.col("source_id").alias("cell_id"),
+            F.col("x").alias("xmin"),
+            F.col("y").alias("ymin"),
+            F.col("x").alias("xmax"),
+            F.col("y").alias("ymax"),
+        ),
+        dst_grid.select("cell_id", *BBOX),
+        tile,
+    )
+    n_per_src = F.count("*").over(Window.partitionBy("s_cell_id"))
+    return cand.select(
+        F.col("s_cell_id").alias("src_id"),
+        F.col("d_cell_id").alias("dst_id"),
+        (F.lit(1.0) / n_per_src).alias("weight"),
+    )
+
+
 def weights_poly_poly(src: DataFrame, dst: DataFrame, tile: float) -> DataFrame:
     """weights(src_id, dst_id, weight) for polygon sources onto *convex*
     polygonal destination cells (triangular ICON meshes, hexagons —

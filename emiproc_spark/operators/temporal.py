@@ -15,6 +15,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from emiproc_spark.core.schemas import PROFILE_SIZES
+from emiproc_spark.localdf import local_rows_df
 from emiproc_spark.qhelpers import widen_for_fanout
 
 # reference SpecificDay enum values → pandas-convention day numbers
@@ -363,7 +364,9 @@ SF_DIM_MAX_ROWS_CONF = "spark.emiproc.sfdim.maxRows"
 SF_DIM_MAX_ROWS_DEFAULT = 20_000_000
 
 
-def check_sf_dim_budget(dims: DataFrame, n_ticks: int, what: str) -> int:
+def check_sf_dim_budget(
+    dims: DataFrame, n_ticks: int, what: str, n_combos: int | None = None
+) -> int:
     """Guard the dimension-side ``sf_dim`` broadcast's cardinality.
 
     ``temporally_scaled`` / ``export_fluxie`` / ``hourly_emission_stream``
@@ -376,14 +379,17 @@ def check_sf_dim_budget(dims: DataFrame, n_ticks: int, what: str) -> int:
     precedes) and raises a NAMED error past the budget, pointing at
     the fact-side alternatives.  Returns the combo count.
 
-    Budget override: ``spark.emiproc.sfdim.maxRows`` (rows).
+    Budget override: ``spark.emiproc.sfdim.maxRows`` (rows).  A caller
+    that already knows the combo count (collected pairs) passes
+    ``n_combos`` and no job runs.
     """
     budget = int(
         dims.sparkSession.conf.get(
             SF_DIM_MAX_ROWS_CONF, str(SF_DIM_MAX_ROWS_DEFAULT)
         )
     )
-    n_combos = dims.count()
+    if n_combos is None:
+        n_combos = dims.count()
     total = n_combos * int(n_ticks)
     if total > budget:
         raise ValueError(
@@ -408,6 +414,7 @@ def temporally_scaled(
     hours: int,
     year_hours: int = 8760,
     source_type: str | None = "gridded",
+    cs_pairs: list[tuple[str, str]] | None = None,
 ) -> DataFrame:
     """The annual→hourly expansion (reference get_temporally_scaled_array,
     emiproc/exports/utils.py:13-156): hourly rate =
@@ -441,13 +448,25 @@ def temporally_scaled(
     the guard's count and the broadcast build share ONE scan of the
     fact table — count-then-rebuild would scan it twice, and at 100 TB
     the second pass costs more than the guard protects.
+
+    ``cs_pairs``: the facts' distinct (category, substance) pairs when
+    the caller has already collected them (``tno_to_hourly`` does, for
+    the writer's code table too): ``dims`` is then a local relation,
+    budget-checked on ``len(cs_pairs)``, and no job runs here.
     """
-    dims = (
-        emissions.select("category", "substance")
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    check_sf_dim_budget(dims, hours, "temporally_scaled")
+    if cs_pairs is None:
+        dims = (
+            emissions.select("category", "substance")
+            .distinct()
+            .localCheckpoint(eager=True)
+        )
+        check_sf_dim_budget(dims, hours, "temporally_scaled")
+    else:
+        pairs = list(dict.fromkeys(map(tuple, cs_pairs)))
+        dims = local_rows_df(
+            emissions.sparkSession, pairs, "category string, substance string"
+        )
+        check_sf_dim_budget(dims, hours, "temporally_scaled", len(pairs))
     times = time_scaffold(emissions, start, hours)
     sf = composite_scaling_factor(F.col("ts"), F.col("__profs"), F.col("__guard"))
     sf_dim = (

@@ -8,6 +8,15 @@ semantics), so every stage keeps its own oracle-checked behavior, and
 the lazy DataFrame chain means Catalyst optimizes across stage
 boundaries (e.g. the category-group broadcast join fuses into the remap
 aggregation's map side).
+
+At inventory scale a call's time is mostly fixed cost per Spark action
+(job scheduling, one Python-worker stage per pandas UDF), not data, so
+each pipeline docstring lists the actions a call runs.  The TNO
+pipelines keep that list short: point sources rasterize JVM-side
+(:func:`rasterize_points`), every export asks the grid its questions
+in one single-task pass (``exports.netcdf.scan_raster_grid``), and
+``tno_to_hourly`` decodes the TNO file once and scans each profile
+frame once.
 """
 
 from __future__ import annotations
@@ -21,8 +30,8 @@ from emiproc_spark.localdf import local_rows_df
 from emiproc_spark.operators.basic import add_inventories, group_categories
 from emiproc_spark.operators.regrid import (
     remap_inventory,
+    weights_points_rect,
     weights_poly_poly,
-    weights_poly_rect,
     weights_remap,
 )
 from emiproc_spark.sources.tno import tno_area_emissions, tno_point_sources
@@ -70,34 +79,23 @@ def rasterize_points(
     """Shaped point sources → gridded long emissions via the 1/n point
     kernel (the reference's gdfs branch of remap_inventory,
     emiproc/regrid.py:522-552).  Cell-edge points split equally between
-    the touching cells (weights_poly_rect's point rule)."""
-    from emiproc_spark.sources.osm import _point_wkb
-
-    shaped = points.select(
-        F.col(id_col).alias("source_id"),
-        _point_wkb(F.col(x_col), F.col(y_col)).alias("geometry"),
-        F.col(x_col).alias("xmin"),
-        F.col(y_col).alias("ymin"),
-        F.col(x_col).alias("xmax"),
-        F.col(y_col).alias("ymax"),
-        "category",
-        "substance",
-        "value_kg_y",
-    )
-    # ONE geometry row per source: the long table repeats each point per
-    # (category, substance), which would multiply the clip kernel's work
-    # and the remap join fan-out by that count (and the 1/n edge rule
-    # would then normalize over duplicates, not cells)
-    w = weights_poly_rect(
-        shaped.select(
-            "source_id", "geometry", "xmin", "ymin", "xmax", "ymax"
+    the touching cells (:func:`weights_points_rect`, JVM-side)."""
+    # ONE row per source: the long table repeats each point per
+    # (category, substance), which would multiply the remap join
+    # fan-out by that count (and the 1/n edge rule would then
+    # normalize over duplicates, not cells)
+    w = weights_points_rect(
+        points.select(
+            F.col(id_col).alias("source_id"),
+            F.col(x_col).alias("x"),
+            F.col(y_col).alias("y"),
         ).dropDuplicates(["source_id"]),
         dst_grid,
         tile=tile,
     )
     return weights_remap(
-        shaped.select(
-            F.col("source_id").alias("cell_id"), "category", "substance",
+        points.select(
+            F.col(id_col).alias("cell_id"), "category", "substance",
             "value_kg_y",
         ),
         w,
@@ -129,6 +127,19 @@ def tno_to_raster(
     remapped totals at ``gate_rtol`` relative tolerance and raises on
     violation — pass ``gate_rtol=None`` to skip (e.g. when ``dst_grid``
     deliberately crops the domain, where mass SHOULD change).
+
+    Spark actions per call (defaults):
+
+    1. the mass gate's collect — runs the whole chain (TNO decode,
+       JVM-side point weights, remap) and fills the caches of the input
+       and remapped inventories;
+    2. the export's grid pass (axes, density and lon-major checks, the
+       ``cell_area`` slab) — one task;
+    3. the export's emission-slab write over the cached remapped
+       inventory.
+
+    With ``gate_rtol=None`` action 1 is skipped and action 3 runs the
+    chain.
     """
     e = tno_area_emissions(spark, tno_file, substances_mapping)
     if include_points:
@@ -343,31 +354,68 @@ def tno_to_hourly(
     profile table (every ratios array sums to 1) and raises on
     violation — ``gate_ticks=None`` opts out.  The gate reads only the
     dimension-sized profile table, so it costs nothing at fact scale.
+
+    Spark actions per call:
+
+    1. the profile gate's collect (skipped with ``gate_ticks=None``) —
+       fills the ``tprofiles`` cache;
+    2. the ``(category, substance)`` pair collect — the ONLY decode of
+       the TNO file; fills the annual inventory's cache.  The pairs
+       build the ``sf_dim`` dimension (budget-checked on their count)
+       and the writer's code table, so neither runs a job of its own;
+    3. the export's grid pass (axes, density and lon-major checks, the
+       ``cell_area`` slab) — one task;
+    4. the per-hour write over the cached inventory and profile frames.
+
+    Frames persisted here are released on return (or on error); a
+    frame the caller had already cached stays cached.
     """
     from emiproc_spark.exports.netcdf import export_hourly_netcdf
     from emiproc_spark.operators.temporal import temporally_scaled
 
-    if gate_ticks is not None:
-        from emiproc_spark.operators.quality import enforce_gates
-
-        enforce_gates(
-            temporal_profile_gates(tprofiles, tol_ticks=gate_ticks),
-            context="tno_to_hourly",
-        )
     e = tno_area_emissions(spark, tno_file, substances_mapping)
-    hourly = temporally_scaled(
-        e, tprofile_index, tprofiles, start, hours, year_hours=year_hours
-    )
-    # the hour explode cannot create new (category, substance) pairs —
-    # hand the writer the pre-fan-out dimension pairs so its code table
-    # costs one pass over the ANNUAL inventory, not the expansion
-    cs_pairs = [
-        (r["category"], r["substance"])
-        for r in e.select("category", "substance").distinct().collect()
-    ]
-    return export_hourly_netcdf(
-        hourly, grid, nx, ny, start, out_dir, cs_pairs=cs_pairs
-    )
+    # the profile gate and the sf_dim build share one scan of each
+    # profile frame; the pair collect and the hour fan-out share ONE
+    # decode of the TNO file
+    persisted = _persist_uncached(tprofiles, tprofile_index, e)
+    try:
+        if gate_ticks is not None:
+            from emiproc_spark.operators.quality import enforce_gates
+
+            enforce_gates(
+                temporal_profile_gates(tprofiles, tol_ticks=gate_ticks),
+                context="tno_to_hourly",
+            )
+        # the hour explode cannot create new (category, substance) pairs
+        # — the pre-fan-out pairs serve as the sf_dim dimension AND the
+        # writer's code table, so neither costs a pass of its own
+        cs_pairs = [
+            (r["category"], r["substance"])
+            for r in e.select("category", "substance").distinct().collect()
+        ]
+        hourly = temporally_scaled(
+            e, tprofile_index, tprofiles, start, hours,
+            year_hours=year_hours, cs_pairs=cs_pairs,
+        )
+        return export_hourly_netcdf(
+            hourly, grid, nx, ny, start, out_dir, cs_pairs=cs_pairs
+        )
+    finally:
+        for df_ in persisted:
+            df_.unpersist()
+
+
+def _persist_uncached(*frames: DataFrame) -> list[DataFrame]:
+    """Persist each frame the caller has not cached already and return
+    the ones persisted here — the only ones the caller may release (a
+    frame the caller cached stays cached after the pipeline)."""
+    from pyspark import StorageLevel
+
+    out = []
+    for df_ in frames:
+        if df_.storageLevel == StorageLevel.NONE:
+            out.append(df_.persist())
+    return out
 
 
 def zurich_to_gral(

@@ -258,7 +258,13 @@ def run_available_now(
     Keep the default ``True`` for watermark-driven operators
     (``dedup_stream``, ``sessionize_stream``, ``windowed_event_stats``
     in append mode): their FINAL windows/sessions flush in exactly
-    those no-data batches.
+    those no-data batches.  Two driver queries are proven exceptions
+    and pass ``False``: ``stream_dedup`` (``dropDuplicatesWithinWatermark``
+    emits every kept row in the data batch that delivered it) and
+    ``stream_sessionize`` (a sentinel event past the last real one
+    closes every real session in the data batch).
+    ``tests/test_stream_no_data_batches.py`` runs both under each
+    setting and asserts equal frames.
 
     ``timeout`` (seconds) bounds the wait; on expiry the query is
     stopped and a ``TimeoutError`` raised (a ProcessingTimeTimeout

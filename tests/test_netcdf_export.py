@@ -228,16 +228,29 @@ def test_raster_export_rejects_non_lonmajor_grid(spark, tmp_path):
         [(0, "A", "CO2", 1.0)],
         "cell_id long, category string, substance string, value_kg_y double",
     )
-    # raised inside the area-slab executor task → surfaces wrapped
     with _pytest.raises(Exception, match="lon-major"):
         export_raster_netcdf(e, grid, str(tmp_path / "bad.nc"))
 
-    # and the standalone validator (fluxie path) rejects it too
-    import numpy as np
+    # and the one-task grid pass every export shares (fluxie path
+    # included) rejects it with the named driver-side error
+    from emiproc_spark.exports.netcdf import scan_raster_grid
 
-    from emiproc_spark.exports.netcdf import validate_lonmajor_grid
-
-    lats = np.arange(nlat, dtype=float)
-    lons = np.arange(nlon, dtype=float)
     with _pytest.raises(ValueError, match="lon-major"):
-        validate_lonmajor_grid(grid, lats, lons)
+        scan_raster_grid(grid)
+
+    # the hourly writer rejects it too, and leaves no slab dir behind
+    import os
+
+    from emiproc_spark.exports.netcdf import export_hourly_netcdf
+
+    hourly = spark.createDataFrame(
+        [(0, "A", "CO2", 0, 1.0)],
+        "cell_id long, category string, substance string, "
+        "hour_index long, value_kg_h double",
+    )
+    out_dir = tmp_path / "hourly"
+    with _pytest.raises(ValueError, match="lon-major"):
+        export_hourly_netcdf(
+            hourly, grid, nlon, nlat, "2024-01-01 00:00:00", str(out_dir)
+        )
+    assert os.listdir(out_dir) == []
