@@ -52,6 +52,8 @@ _REVERIFY = [
     # the raster and fluxie exports ask the grid in one task
     # (exports.netcdf.scan_raster_grid)
     "netcdf_ingest", "fluxie_export", "netcdf4_ingest", "cf_attrs",
+    # temporally_scaled builds its sf_dim dimension from collected pairs
+    "temporal_expand",
 ]
 
 

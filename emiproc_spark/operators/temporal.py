@@ -364,9 +364,7 @@ SF_DIM_MAX_ROWS_CONF = "spark.emiproc.sfdim.maxRows"
 SF_DIM_MAX_ROWS_DEFAULT = 20_000_000
 
 
-def check_sf_dim_budget(
-    dims: DataFrame, n_ticks: int, what: str, n_combos: int | None = None
-) -> int:
+def check_sf_dim_budget(dims: DataFrame, n_ticks: int, what: str) -> int:
     """Guard the dimension-side ``sf_dim`` broadcast's cardinality.
 
     ``temporally_scaled`` / ``export_fluxie`` / ``hourly_emission_stream``
@@ -379,17 +377,24 @@ def check_sf_dim_budget(
     precedes) and raises a NAMED error past the budget, pointing at
     the fact-side alternatives.  Returns the combo count.
 
-    Budget override: ``spark.emiproc.sfdim.maxRows`` (rows).  A caller
-    that already knows the combo count (collected pairs) passes
-    ``n_combos`` and no job runs.
+    Budget override: ``spark.emiproc.sfdim.maxRows`` (rows).
     """
-    budget = int(
-        dims.sparkSession.conf.get(
-            SF_DIM_MAX_ROWS_CONF, str(SF_DIM_MAX_ROWS_DEFAULT)
-        )
+    n_combos = dims.count()
+    _enforce_sf_dim_budget(
+        n_combos, n_ticks, _sf_dim_budget(dims.sparkSession), what
     )
-    if n_combos is None:
-        n_combos = dims.count()
+    return n_combos
+
+
+def _sf_dim_budget(spark) -> int:
+    return int(
+        spark.conf.get(SF_DIM_MAX_ROWS_CONF, str(SF_DIM_MAX_ROWS_DEFAULT))
+    )
+
+
+def _enforce_sf_dim_budget(
+    n_combos: int, n_ticks: int, budget: int, what: str
+) -> None:
     total = n_combos * int(n_ticks)
     if total > budget:
         raise ValueError(
@@ -403,7 +408,6 @@ def check_sf_dim_budget(
             "cell-keyed path (temporally_scaled_cellwise), which joins "
             "its sf table instead of force-broadcasting it."
         )
-    return n_combos
 
 
 def temporally_scaled(
@@ -414,7 +418,6 @@ def temporally_scaled(
     hours: int,
     year_hours: int = 8760,
     source_type: str | None = "gridded",
-    cs_pairs: list[tuple[str, str]] | None = None,
 ) -> DataFrame:
     """The annual→hourly expansion (reference get_temporally_scaled_array,
     emiproc/exports/utils.py:13-156): hourly rate =
@@ -444,29 +447,22 @@ def temporally_scaled(
     The low-cardinality contract is GUARDED: the combo count is checked
     against the ``sf_dim`` row budget (:func:`check_sf_dim_budget`) and
     a combo-explosive caller gets a named error instead of a broadcast
-    OOM (r10 advisor).  The distinct is localCheckpoint'd (eager) so
-    the guard's count and the broadcast build share ONE scan of the
-    fact table — count-then-rebuild would scan it twice, and at 100 TB
-    the second pass costs more than the guard protects.
-
-    ``cs_pairs``: the facts' distinct (category, substance) pairs when
-    the caller has already collected them (``tno_to_hourly`` does, for
-    the writer's code table too): ``dims`` is then a local relation,
-    budget-checked on ``len(cs_pairs)``, and no job runs here.
+    OOM (r10 advisor).  The distinct pairs are collected in ONE job
+    and ``dims`` is a local relation built from them, so the guard and
+    the broadcast build share one scan of the fact table.  The collect
+    stops one pair past the budget, so it is never larger than the
+    broadcast it guards; only an over-budget input pays a second pass
+    (an exact count for the error message).
     """
-    if cs_pairs is None:
-        dims = (
-            emissions.select("category", "substance")
-            .distinct()
-            .localCheckpoint(eager=True)
-        )
-        check_sf_dim_budget(dims, hours, "temporally_scaled")
-    else:
-        pairs = list(dict.fromkeys(map(tuple, cs_pairs)))
-        dims = local_rows_df(
-            emissions.sparkSession, pairs, "category string, substance string"
-        )
-        check_sf_dim_budget(dims, hours, "temporally_scaled", len(pairs))
+    spark = emissions.sparkSession
+    budget = _sf_dim_budget(spark)
+    combos = emissions.select("category", "substance").distinct()
+    cap = budget // max(int(hours), 1) + 1
+    pairs = [tuple(r) for r in combos.limit(cap).collect()]
+    # cap pairs × hours is past the budget by construction
+    n_combos = len(pairs) if len(pairs) < cap else combos.count()
+    _enforce_sf_dim_budget(n_combos, hours, budget, "temporally_scaled")
+    dims = local_rows_df(spark, pairs, "category string, substance string")
     times = time_scaffold(emissions, start, hours)
     sf = composite_scaling_factor(F.col("ts"), F.col("__profs"), F.col("__guard"))
     sf_dim = (

@@ -359,13 +359,14 @@ def tno_to_hourly(
 
     1. the profile gate's collect (skipped with ``gate_ticks=None``) —
        fills the ``tprofiles`` cache;
-    2. the ``(category, substance)`` pair collect — the ONLY decode of
-       the TNO file; fills the annual inventory's cache.  The pairs
-       build the ``sf_dim`` dimension (budget-checked on their count)
-       and the writer's code table, so neither runs a job of its own;
-    3. the export's grid pass (axes, density and lon-major checks, the
+    2. ``temporally_scaled``'s ``(category, substance)`` pair collect
+       (the ``sf_dim`` dimension and its budget check) — the ONLY
+       decode of the TNO file; fills the annual inventory's cache;
+    3. the same pair collect for the writer's code table, read from
+       that cache;
+    4. the export's grid pass (axes, density and lon-major checks, the
        ``cell_area`` slab) — one task;
-    4. the per-hour write over the cached inventory and profile frames.
+    5. the per-hour write over the cached inventory and profile frames.
 
     Frames persisted here are released on return (or on error); a
     frame the caller had already cached stays cached.
@@ -375,7 +376,7 @@ def tno_to_hourly(
 
     e = tno_area_emissions(spark, tno_file, substances_mapping)
     # the profile gate and the sf_dim build share one scan of each
-    # profile frame; the pair collect and the hour fan-out share ONE
+    # profile frame; the pair collects and the hour fan-out share ONE
     # decode of the TNO file
     persisted = _persist_uncached(tprofiles, tprofile_index, e)
     try:
@@ -386,17 +387,16 @@ def tno_to_hourly(
                 temporal_profile_gates(tprofiles, tol_ticks=gate_ticks),
                 context="tno_to_hourly",
             )
+        hourly = temporally_scaled(
+            e, tprofile_index, tprofiles, start, hours, year_hours=year_hours
+        )
         # the hour explode cannot create new (category, substance) pairs
-        # — the pre-fan-out pairs serve as the sf_dim dimension AND the
-        # writer's code table, so neither costs a pass of its own
+        # — hand the writer the pre-fan-out pairs (read from the cached
+        # annual inventory) so its code table skips the expansion
         cs_pairs = [
             (r["category"], r["substance"])
             for r in e.select("category", "substance").distinct().collect()
         ]
-        hourly = temporally_scaled(
-            e, tprofile_index, tprofiles, start, hours,
-            year_hours=year_hours, cs_pairs=cs_pairs,
-        )
         return export_hourly_netcdf(
             hourly, grid, nx, ny, start, out_dir, cs_pairs=cs_pairs
         )
